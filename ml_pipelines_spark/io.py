@@ -305,12 +305,6 @@ def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return out
 
 
-def register_testdata(spark: SparkSession, sf_dir: str) -> None:
-    """Register the testdata tables as temp views for spark.sql use."""
-    for name, df in load_testdata(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def evolve_read(
     spark: SparkSession,
     path: str,

@@ -116,11 +116,6 @@ def stratified_hash_sample(
     return df.filter(cond)
 
 
-def sample_keys(keys: DataFrame, fraction: float, seed: int) -> DataFrame:
-    """R1 (TrainDatasets.py:258,262): seeded fraction-sample of a key set."""
-    return keys.sample(fraction=fraction, seed=seed)
-
-
 def hash_k_per_group(
     df: DataFrame,
     group_cols: list[str],

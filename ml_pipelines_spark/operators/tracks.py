@@ -1,4 +1,4 @@
-"""Track gap-fill interpolation (SURVEY.md §2.5 W4-W6) as applyInPandas.
+"""Track gap-fill interpolation (SURVEY.md §2.5 W4-W5) as applyInPandas.
 
 Re-expresses the reference's keyframe interpolation
 (CvatApi.py:427-731, itself derived from the MIT-licensed CVAT
@@ -11,7 +11,7 @@ dataset_manager) with a numpy kernel distributed per track:
   is thinned segment-by-segment with the source curve's density threshold
   (len/2n) — the same matching/reduction semantics as CVAT;
 - the last keyframe propagates to ``end_frame`` unless marked outside
-  (W5); attributes carry forward to keyframes that miss a spec_id (W6);
+  (W5);
 - outside non-keyframes are excluded, frames clamped to
   [track_frame, end_frame).
 
@@ -29,7 +29,6 @@ from collections.abc import Iterable
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -255,10 +254,14 @@ def interpolate_tracks(
     amortized to one crossing per batch; per-track work itself is the
     irreducible sequential kernel.
 
-    The repartition pins an explicit partition count: this stage is
-    CPU-bound Python, so parallelism must track cores, not bytes — left
-    to AQE, a few MB of keyframes coalesce into ONE partition and the
-    whole kernel runs on a single thread.
+    Partition rule: the repartition pins the partition count to
+    ``sparkContext.defaultParallelism``, the cores of the application.
+    This stage is CPU-bound Python, so parallelism must track cores, not
+    bytes — left to AQE, a few MB of keyframes coalesce into ONE
+    partition and the whole kernel runs on a single thread, while
+    ``spark.sql.shuffle.partitions`` (sized for shuffles, often several
+    times the cores) pays one Python task's fixed cost per extra
+    partition.
     """
     group_cols = group_cols or []
     keys = [*group_cols, "track_id"]
@@ -291,26 +294,9 @@ def interpolate_tracks(
                     )
             yield pd.DataFrame(out_rows, columns=out_cols)
 
-    n_parts = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
     partitioned = df.repartition(n_parts, *keys).sortWithinPartitions(
         *keys, "frame"
     )
     return partitioned.mapInPandas(fill_batches, schema=out_schema)
 
-
-def carry_forward_attributes(df: DataFrame, spec_cols: list[str]) -> DataFrame:
-    """W6 as a pure window op: per (track_id, spec column), the last
-    non-null value at or before each frame (CvatApi.py:700-703)."""
-    from pyspark.sql.window import Window
-
-    w = (
-        Window.partitionBy("track_id")
-        .orderBy("frame")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = df
-    for c in spec_cols:
-        out = out.withColumn(c, F.last(c, ignorenulls=True).over(w))
-    return out

@@ -319,65 +319,80 @@ from . import pipelines  # noqa: E402,F401
 #     lead its window).
 # 1 + 17 + 12 + 4 + 16 = 50.
 # ---------------------------------------------------------------------------
+# ---------------------------------------------------------------------------
+# Round-14 window, filled by the standing schedule:
+# (a) rule 1 — never driver-checked: none.
+# (b) rule 2 — code touched this round: the one-collect COCO document
+#     (coco_records is the export-family refresher below), the single-
+#     action YOLO writer (yolo_export_lines), and the core-sized
+#     Python-kernel stages (track_interpolation, rbb_from_seg).
+# (c) the flagship.
+# (d) rule 4 — SLA pressure: the 16 queries whose evidence is 8 rounds
+#     old (round 13 left them out; see its header), alphabetical; one
+#     refresher each for the families whose freshest member ages past 3
+#     this round (export: coco_records; audio, geo and validation: their
+#     oldest member, age 7; linalg: pca_top_component); then 25 of the
+#     remaining age-7 queries, alphabetical. The 12 that do not fit
+#     (q11_important_stock through union_all) are inside the SLA this
+#     round and lead round 15's window.
+# 1 + 3 + 16 + 5 + 25 = 50.
+# ---------------------------------------------------------------------------
 _CHECK_FIRST = [
     # (c) flagship rides every round
     "q1_pricing_summary",
-    # (b) VERDICT r12 item 1: the 17 round-12 rewrites lacking driver
-    # correctness evidence, verbatim from the verdict list
-    # (exact_heavy_hitters there names the heavy_hitters_two_pass
-    # registration)
-    "knn_label_agreement",
-    "ann_recall_eval",
-    "feature_ablation_importance",
-    "psi_drift_orders",
-    "dedup_recall_eval",
-    "basket_brand_rules",
-    "temporal_cv_folds",
-    "gdpr_erasure_audit",
-    "bpe_train_merges",
-    "bm25_top_docs",
-    "rrf_hybrid_search",
-    "search_eval_ndcg",
-    "curate_corpus_v2",
-    "item_item_cosine",
-    "ewma_daily_value",
-    "neyman_allocation_sample",
-    "heavy_hitters_two_pass",
-    # (b) rule 2: code touched in round 13
-    "doc_length_quartiles",
-    "gini_revenue_concentration",
-    "quantile_normalize_lengths",
-    "token_budget_per_source",
-    "token_budget_bpe",
-    "stream_mor_upsert_replay",
-    "stream_table_appends_replay",
-    "logreg_quality_train",
-    "stream_session_replay",
-    "lm_perplexity_docs",
-    "mor_merge_audit",
-    "small_file_compaction_audit",
-    # (d) family SLA refreshers
-    "orc_roundtrip_docs",
-    "sequence_match_funnel",
-    "e1_training_assembly",
-    "grouped_quantile_udaf",
-    # (d) rule 4: age-7 block, alphabetical (16 of 39 — see header)
-    "ab_test_zscores",
-    "activity_streaks",
-    "attribution_last_touch",
-    "classifier_calibration",
-    "containment_pairs_docs",
-    "cube_pricing",
-    "entity_resolution_suppliers",
-    "kmv_distinct_users",
-    "label_centroid_similarity",
-    "label_prop_communities",
-    "mad_outlier_docs",
-    "mixed_lang_docs",
-    "near_dup_components",
-    "near_dup_keep_best",
-    "ngram_jaccard_pairs",
-    "pareto_front_docs",
+    # (b) rule 2: code touched in round 14
+    "yolo_export_lines",
+    "track_interpolation",
+    "rbb_from_seg",
+    # (d) rule 4: age-8 block, alphabetical
+    "near_dup_keep_docs",
+    "q10_returned_items",
+    "q13_order_count_distribution",
+    "q16_supplier_variety",
+    "q17_small_qty_revenue",
+    "q18_large_orders",
+    "q19_disjunctive_revenue",
+    "q21_late_sole_supplier",
+    "q22_idle_balance",
+    "q7_volume_shipping",
+    "q8_market_share",
+    "range_frame_weekly",
+    "training_shard_manifest",
+    "triangle_count_near_dup",
+    "video_scene_cuts",
+    "zipf_slope_by_source",
+    # (d) family SLA refreshers (export, audio, geo, validation, linalg)
+    "coco_records",
+    "audio_frame_features",
+    "grid_density_clusters",
+    "scd2_orders_history",
+    "pca_top_component",
+    # (d) rule 4: age-7 block, alphabetical (25 of 37 — see header)
+    "array_restructure",
+    "bfs_hops_near_dup",
+    "bootstrap_ci_mean",
+    "chunk_documents",
+    "count_per_group",
+    "decontaminate_train",
+    "dedup_exact_docs",
+    "distinct_keys",
+    "epoch_repeat_docs",
+    "filename_normalize",
+    "filter_eq",
+    "filter_isin",
+    "image_exif_normalize",
+    "image_meta_decode",
+    "json_extract",
+    "kcore_near_dup",
+    "knn_bruteforce",
+    "minhash_near_dup",
+    "minhash_signature",
+    "mixture_temperature_sample",
+    "naive_bayes_langid",
+    "pagerank_near_dup",
+    "peak_concurrency",
+    "pii_redact_docs",
+    "pmi_bigrams",
 ]
 
 

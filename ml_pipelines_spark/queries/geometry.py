@@ -193,9 +193,12 @@ def yolo_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def rbb_from_seg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # embeddings is one small file = one scan partition; spread the
-    # CPU-bound numpy kernel across the cores.
-    n = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    df = with_rotated_bbox(_seg_df(spark, sf_dir), seg_col="s", repartition=n)
+    # CPU-bound numpy kernel across the cores (one task per core, as in
+    # operators.tracks.interpolate_tracks).
+    df = with_rotated_bbox(
+        _seg_df(spark, sf_dir), seg_col="s",
+        repartition=spark.sparkContext.defaultParallelism,
+    )
     eps = 1e-6
     x = F.element_at("rcoco", 1)
     y = F.element_at("rcoco", 2)

@@ -1,11 +1,17 @@
 """COCO JSON export (SURVEY.md §2.1 S10, §2.4 A4/A6/A7).
 
 Re-expresses the reference exporter (create_coco_from_feather.py:46-116)
-as Spark plans: category dictionary-encoding, dense image/annotation id
-assignment, and the image↔annotation join all run distributed; only the
-final (small) JSON document assembly collects to the driver — a COCO file
-is a single small document by definition, so the edge collect is the
-export, not a shortcut.
+two ways:
+
+- ``coco_categories``, ``coco_images`` and ``coco_annotations`` are Spark
+  plans — category dictionary-encoding, dense image/annotation id
+  assignment and the image↔annotation join all run distributed, for
+  callers that keep the records as a table (``queries/export.py``);
+- ``coco_document`` / ``write_coco_json`` build the JSON document. A COCO
+  file is a single small document by definition and is collected to the
+  driver anyway, so the document builder collects the projected
+  annotation rows once and the image dimension once and assigns the ids
+  on the driver, by the same rules.
 
 Reference semantics preserved:
 - category ids are 1-based over the *sorted* distinct categories
@@ -206,37 +212,68 @@ def coco_document(
     odtk: bool = True,
     train: bool = True,
 ) -> dict:
-    """Assemble the complete COCO dict (edge collect — the document is
-    small by contract; data stays distributed until here)."""
-    cats = [
-        {"supercategory": r["name"], "id": r["category_id"], "name": r["name"]}
-        for r in coco_categories(anno).orderBy("category_id").collect()
-    ]
+    """Assemble the complete COCO dict on the driver.
+
+    The document is collected by contract, so ids are assigned here from
+    one collect of the projected annotation rows and one of the image
+    dimension, by the rules of the distributed builders above: category
+    ids 1-based over the sorted names of every annotation, image ids
+    0-based in ``image_name`` order, annotation ids 0-based in
+    (``image_name``, ``category``) order over the annotations whose image
+    is in ``images``. Ties within (``image_name``, ``category``) keep the
+    collect order, as they are unordered in :func:`coco_annotations`.
+    """
+    keep_seg = not (odtk and train)
+    bbox = F.col("rcoco") if odtk else segmentation_bbox(F.col("segmentation"))
+    rows = anno.select(
+        "image_name",
+        "category",
+        bbox.alias("bbox"),
+        (F.element_at("rcoco", 3) * F.element_at("rcoco", 4)).alias("area"),
+        *(["segmentation"] if keep_seg else []),
+    ).collect()
+    dims = sorted(
+        images.select("image_name", "width", "height").collect(),
+        key=lambda r: r["image_name"],
+    )
+
+    # a null category sorts first, as in coco_categories' window
+    names = sorted(
+        {r["category"] for r in rows}, key=lambda v: (v is not None, v)
+    )
+    cat_id = {name: i for i, name in enumerate(names, start=1)}
+    image_id = {r["image_name"]: i for i, r in enumerate(dims)}
+    cats = [{"supercategory": n, "id": cat_id[n], "name": n} for n in names]
     imgs = [
         {
             "license": 1,
             "file_name": r["image_name"] + ".jpeg",
             "height": r["height"],
             "width": r["width"],
-            "id": r["image_id"],
+            "id": i,
         }
-        for r in coco_images(images).orderBy("image_id").collect()
+        for i, r in enumerate(dims)
     ]
+    # the inner joins of coco_annotations: drop annotations whose image is
+    # not in ``images`` (or whose category is null)
+    kept = sorted(
+        (
+            r for r in rows
+            if r["image_name"] in image_id and r["category"] is not None
+        ),
+        key=lambda r: (r["image_name"], r["category"]),
+    )
     annos = []
-    for r in (
-        coco_annotations(anno, images, odtk=odtk, train=train)
-        .orderBy("anno_id")
-        .collect()
-    ):
+    for i, r in enumerate(kept):
         rec = {
-            "iscrowd": r["iscrowd"],
-            "image_id": r["image_id"],
+            "iscrowd": 0,
+            "image_id": image_id[r["image_name"]],
             "bbox": list(r["bbox"]) if r["bbox"] is not None else None,
-            "category_id": r["category_id"],
+            "category_id": cat_id[r["category"]],
             "area": r["area"],
-            "id": r["anno_id"],
+            "id": i,
         }
-        if "segmentation" in r.__fields__:
+        if keep_seg:
             rec["segmentation"] = [list(r["segmentation"])]
         annos.append(rec)
     return {

@@ -5,8 +5,8 @@ group annotations by image, normalize boxes to image dims, one txt file
 per image with one "<category_id> <coords...>" line per annotation.
 
 Spark-first shape: the O(images x annotations) driver dict of the
-reference becomes one broadcast join + one groupBy; files are written by
-``foreachPartition`` so the fan-out runs on executors (each partition
+reference becomes one broadcast join + one groupBy; files are written
+per partition, so the fan-out runs on executors (each partition
 writes its own images — at scale point the output at a shared
 filesystem/object store path).
 
@@ -135,16 +135,21 @@ def yolo_files(lines: DataFrame) -> DataFrame:
 def write_yolo_dir(lines: DataFrame, output_txt_dir: str) -> int:
     """Write <image_name>.txt files from executors; returns file count.
 
+    One Spark action: each partition writes its files and yields how many
+    it wrote, and the driver sums the counts, so the join and group-by
+    plan under ``lines`` runs once.
+
     ``output_txt_dir`` must be visible to executors (shared fs / fuse
     mount on a cluster; any local dir under local[*])."""
     os.makedirs(output_txt_dir, exist_ok=True)
-    files = yolo_files(lines)
 
     def write_partition(rows):
+        n = 0
         for row in rows:
             path = os.path.join(output_txt_dir, row["image_name"] + ".txt")
             with open(path, "w") as f:
                 f.write(row["content"])
+            n += 1
+        yield n
 
-    files.foreachPartition(write_partition)
-    return files.count()
+    return sum(yolo_files(lines).rdd.mapPartitions(write_partition).collect())

@@ -62,14 +62,6 @@ def normalize_image_name(name: str) -> str:
     return base + ".jpeg"
 
 
-def normalize_image_name_col(name):
-    """Expression twin of normalize_image_name (oracle-checkable)."""
-    base = F.element_at(F.split(name, "/"), -1)
-    base = F.regexp_replace(base, JPEG_SUFFIX_RE, "")
-    base = F.regexp_replace(base, TASK_PREFIX_RE, "")
-    return F.concat(base, F.lit(".jpeg"))
-
-
 class CvatSource:
     """Transport-injected CVAT adapter. Paths mirror the reference's
     endpoints (``projects/{id}``, ``tasks``, ``jobs/{id}/annotations``...)."""

@@ -337,6 +337,38 @@ class TestInterpolationKernel:
         assert set(pdf["job_id"]) == {50}
 
 
+class TestCoreSizedKernelStages:
+    """The CPU-bound Python stages take one partition per core, whatever
+    spark.sql.shuffle.partitions says."""
+
+    @pytest.fixture
+    def odd_shuffle_partitions(self, spark):
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        yield
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+    def test_interpolate_tracks_partitions_track_cores(
+        self, spark, sf_dir, odd_shuffle_partitions
+    ):
+        from ml_pipelines_spark.queries.tracks import _keyframes_df
+        from ml_pipelines_spark.testing import check_query
+
+        out = interpolate_tracks(_keyframes_df(spark, sf_dir), end_frame=12)
+        parallelism = spark.sparkContext.defaultParallelism
+        assert parallelism != 3
+        assert out.rdd.getNumPartitions() == parallelism
+        assert check_query(spark, sf_dir, "track_interpolation") == []
+
+    def test_rbb_from_seg_partitions_track_cores(
+        self, spark, sf_dir, odd_shuffle_partitions
+    ):
+        from ml_pipelines_spark.queries import QUERIES
+
+        out = QUERIES["rbb_from_seg"](spark, sf_dir)
+        assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
 class TestDataSourceApi:
     def test_format_read_matches_driver_side(self, spark):
         """spark.read.format('cvat_shapes') through the Spark 4 Python

@@ -13,6 +13,8 @@ from ml_pipelines_spark.queries.export import _anno_df, _images_df
 from ml_pipelines_spark.sinks.coco import (
     coco_annotations,
     coco_categories,
+    coco_document,
+    coco_images,
     write_coco_json,
 )
 from ml_pipelines_spark.sinks.yolo import write_yolo_dir, yolo_files, yolo_lines
@@ -82,6 +84,93 @@ class TestCocoDocument:
             assert len(r["segmentation"]) == 8
 
 
+class TestDocumentMatchesBuilders:
+    """The driver-side document assigns the ids the distributed builders
+    assign: categories 1-based over the sorted names of every annotation,
+    images 0-based in image_name order, annotations 0-based in
+    (image_name, category) order over annotations with a known image."""
+
+    @pytest.fixture(scope="class")
+    def anno_orphan(self, corpus):
+        anno, _ = corpus
+        # an annotation whose image is not in `images`, carrying the only
+        # use of category "M" (sorts between the real "A" and "N")
+        orphan = anno.limit(1).select(
+            F.lit("img_missing").alias("image_name"),
+            F.lit("M").alias("category"),
+            *[c for c in anno.columns if c not in ("image_name", "category")],
+        )
+        return anno.unionByName(orphan)
+
+    @staticmethod
+    def _records(rows):
+        recs = []
+        for r in rows:
+            rec = {
+                "iscrowd": r["iscrowd"],
+                "image_id": r["image_id"],
+                "bbox": list(r["bbox"]),
+                "category_id": r["category_id"],
+                "area": r["area"],
+                "id": r["anno_id"],
+            }
+            if "segmentation" in r.__fields__:
+                rec["segmentation"] = [list(r["segmentation"])]
+            recs.append(rec)
+        return recs
+
+    @pytest.mark.parametrize(
+        "odtk,train",
+        [(True, True), (True, False), (False, True), (False, False)],
+    )
+    def test_equals_distributed_builders(
+        self, corpus, anno_orphan, odtk, train
+    ):
+        _, images = corpus
+        doc = coco_document(anno_orphan, images, odtk=odtk, train=train)
+
+        cats = coco_categories(anno_orphan).orderBy("category_id").collect()
+        assert doc["categories"] == [
+            {"supercategory": r["name"], "id": r["category_id"], "name": r["name"]}
+            for r in cats
+        ]
+        assert "M" in {c["name"] for c in doc["categories"]}
+
+        imgs = coco_images(images).orderBy("image_id").collect()
+        assert doc["images"] == [
+            {
+                "license": 1,
+                "file_name": r["image_name"] + ".jpeg",
+                "height": r["height"],
+                "width": r["width"],
+                "id": r["image_id"],
+            }
+            for r in imgs
+        ]
+
+        ref = self._records(
+            coco_annotations(anno_orphan, images, odtk=odtk, train=train)
+            .orderBy("anno_id")
+            .collect()
+        )
+        got = doc["annotations"]
+        # dense ids, and the same (image, category) sequence in id order
+        assert [a["id"] for a in got] == list(range(len(got)))
+        assert [a["id"] for a in ref] == list(range(len(ref)))
+        assert [(a["image_id"], a["category_id"]) for a in got] == [
+            (a["image_id"], a["category_id"]) for a in ref
+        ]
+        # ties within (image_name, category) are unordered: compare the
+        # records without their ids as multisets
+        def strip(recs):
+            return sorted(repr({k: v for k, v in a.items() if k != "id"})
+                          for a in recs)
+        assert strip(got) == strip(ref)
+        # the orphan annotation is dropped, its category is not used
+        m_id = next(c["id"] for c in doc["categories"] if c["name"] == "M")
+        assert all(a["category_id"] != m_id for a in got)
+
+
 class TestYoloFiles:
     def test_files_written_and_parse(self, corpus, tmp_path):
         anno, images = corpus
@@ -121,6 +210,45 @@ class TestYoloFiles:
         for r in lines:
             parts = r["line"].split(" ")
             assert len(parts) == 1 + 8  # cat + 4 points x/y
+
+
+class TestYoloSinglePass:
+    def test_input_plan_runs_once(self, spark, tmp_path):
+        images = spark.createDataFrame(
+            [("a", 100, 50), ("b", 200, 100), ("c", 100, 100)],
+            ["image_name", "width", "height"],
+        )
+        box = [10.0, 10.0, 30.0, 10.0, 30.0, 20.0, 10.0, 20.0]
+        anno = spark.createDataFrame(
+            [("a", "car", box), ("a", "car", box), ("a", "person", box),
+             ("b", "person", box),
+             # c carries only a redaction polygon: no label file
+             ("c", "excluderegion", box)],
+            "image_name string, category string, segmentation array<double>",
+        )
+        cats = spark.createDataFrame(
+            [("car", 1), ("person", 2)], ["name", "category_id"]
+        )
+        evaluated = spark.sparkContext.accumulator(0)
+
+        @F.udf("string")
+        def tick(name):
+            evaluated.add(1)
+            return name
+
+        # on the grouping key, so any action over the files plan needs it
+        lines = yolo_lines(anno, images, cats).withColumn(
+            "image_name", tick("image_name")
+        )
+        out_dir = str(tmp_path / "labels")
+        n = write_yolo_dir(lines, out_dir)
+
+        assert evaluated.value == 4  # one evaluation per line
+        files = sorted(os.listdir(out_dir))
+        assert files == ["a.txt", "b.txt"]
+        assert n == len(files)
+        with open(os.path.join(out_dir, "a.txt")) as f:
+            assert len(f.read().splitlines()) == 3
 
 
 # ---------------------------------------------------------------------------
