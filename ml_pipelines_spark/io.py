@@ -18,8 +18,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
-from .schemas import TESTDATA_SCHEMAS
-
 
 def read_table(
     spark: SparkSession,
@@ -289,20 +287,6 @@ def read_timestamp_table(
     if ns_cols:
         return read_ns_timestamp_table(spark, path, schema, ns_cols)
     return read_table(spark, path, schema)
-
-
-def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load the driver's synthetic tables (TESTDATA.md) with declared schemas."""
-    out = {}
-    for name, schema in TESTDATA_SCHEMAS.items():
-        ts_cols = [f.name for f in schema.fields if f.dataType.typeName() == "timestamp"]
-        if ts_cols:
-            out[name] = read_timestamp_table(
-                spark, f"{sf_dir}/{name}.parquet", schema, ts_cols
-            )
-        else:
-            out[name] = read_table(spark, f"{sf_dir}/{name}.parquet", schema)
-    return out
 
 
 def evolve_read(

@@ -47,8 +47,10 @@ from pyspark.sql import SparkSession
 
 
 def _fs(spark: SparkSession, path: str):
-    """Hadoop FileSystem for ``path`` (same helper as manifest._fs;
-    duplicated here to keep the import graph acyclic)."""
+    """Hadoop FileSystem for ``path`` — works for local paths, file://
+    and any configured remote scheme (the scale-correct deletion API;
+    never shell out or assume a local mount). ``operators.manifest``
+    re-exports it."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())

@@ -401,6 +401,7 @@ def write_manifest_table_zordered(
         CommitConflict,
         _abort_claim,
         _claim_version,
+        _commit_manifest,
         _latest_version,
     )
 
@@ -429,22 +430,7 @@ def write_manifest_table_zordered(
             .write.mode("errorifexists")
             .parquet(data_dir)
         )
-        zone_map = (
-            spark.read.parquet(data_dir)
-            .select(
-                F.input_file_name().alias("file"),
-                F.col(col_a).alias("v_"),
-            )
-            .groupBy("file")
-            .agg(
-                F.min("v_").alias("min_v"),
-                F.max("v_").alias("max_v"),
-                F.count(F.lit(1)).alias("n_rows"),
-            )
-        )
-        zone_map.repartition(1).write.mode("errorifexists").parquet(
-            f"{path}/_manifest/v={version}"
-        )
+        _commit_manifest(spark, path, version, data_dir, col_a)
         write_file_stats(spark, path, [col_a, col_b], version)
     except Exception:
         # failed post-claim commit: back out the partial version and

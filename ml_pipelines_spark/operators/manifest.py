@@ -30,7 +30,15 @@ The residual filter makes correctness independent of HOW files were
 assigned (range-boundary sampling is not deterministic); the manifest
 affects only which files can be skipped, never the result.
 
-Scale bound, stated: planning collects the manifest to the driver —
+Metadata is a driver-side file operation: every metadata sidecar
+(manifests, tags, restores, schema events, the manifest list, staged
+and branch manifests) is listed, read and written through
+``operators.sidecars`` (``pyarrow.fs``) — a tag, an ALTER or a RESTORE
+runs no Spark job. Spark jobs are spent on data: the data writes, the
+one zone-map aggregate per commit, and the data-sized ``_deletes`` /
+``_posdeletes`` sidecars.
+
+Scale bound, stated: planning reads the manifest on the driver —
 O(files) rows of a few hundred bytes. That holds comfortably to ~10^6
 files per snapshot (the compactor exists precisely to keep file counts
 there); past that, ``build_manifest_list`` adds the manifest-of-
@@ -42,9 +50,11 @@ shards the band overlaps — the same zone-map trick one level up.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+
+from . import sidecars
+from .claims import _fs
 
 
 class CommitConflict(RuntimeError):
@@ -56,16 +66,15 @@ class CommitConflict(RuntimeError):
 
 
 # ---------------------------------------------------------------------------
-# Driver-side metadata reads (VERDICT r10 item 4). Every table format
-# reads its metadata tier on the DRIVER (Iceberg manifests, Delta's
-# JSON log) — scheduling a distributed Spark job per tiny sidecar
-# probe (manifest collect, tombstone/DV limit-counts, schema events)
-# is pure scheduler latency: a MoR commit was ~10 blocking jobs per
-# trigger with most of them reading a few kilobytes. When the table's
-# resolved filesystem is LOCAL, the sidecars are read with pyarrow in
-# the driver process (zero jobs); remote filesystems and oversized
-# sidecars (> _DRIVER_METADATA_CAP — metadata that outgrew the driver)
-# keep the distributed read.
+# Driver-side metadata I/O. Every table format reads and writes its
+# metadata tier on the DRIVER (Iceberg manifests, Delta's JSON log) — a
+# distributed Spark job per few-row sidecar is pure scheduler latency.
+# The table path is qualified once through the Hadoop config (a
+# scheme-less path means the DEFAULT filesystem, which may be HDFS;
+# ADVICE r9) and handed to ``operators.sidecars``. The data-sized
+# delete sidecars (``_deletes``, ``_posdeletes``) are the one
+# exception: above _DRIVER_METADATA_CAP bytes they keep the
+# distributed read (metadata that outgrew the driver).
 # ---------------------------------------------------------------------------
 _DRIVER_METADATA_CAP = 64 * 1024 * 1024
 
@@ -77,92 +86,61 @@ _DRIVER_METADATA_CAP = 64 * 1024 * 1024
 _LOCAL_SIDECAR_ROWS_MAX = 50_000
 
 
-def _local_metadata_dir(
-    spark: SparkSession, path: str, name: str
-) -> str | None:
-    """Resolved LOCAL directory for sidecar ``<path>/<name>``, or None
-    when the table lives on a non-local filesystem. Resolution goes
-    through the Hadoop config (never urlparse — a scheme-less path
-    means the DEFAULT filesystem, which may be HDFS; ADVICE r9)."""
-    import os
+def _qualified(spark: SparkSession, path: str) -> str:
+    """``path`` qualified through the Hadoop configuration (scheme and
+    authority made explicit, relative paths made absolute)."""
+    fs, jvm = _fs(spark, path)
+    return fs.makeQualified(jvm.org.apache.hadoop.fs.Path(path)).toString()
 
-    try:
-        fs, jvm = _fs(spark, path)
-        if fs.getUri().getScheme() != "file":
-            return None
-        p = jvm.org.apache.hadoop.fs.Path(f"{path}/{name}")
-        local = fs.makeQualified(p).toUri().getPath()
-    except Exception:
-        return None
-    return local if os.path.isdir(local) else None
+
+def _meta(spark: SparkSession, path: str):
+    """(pyarrow FileSystem, root) of table ``path``. A scheme pyarrow
+    cannot open raises ``sidecars.UnsupportedFilesystemError``."""
+    return sidecars.resolve(_qualified(spark, path))
+
+
+def _sidecar_rows(spark: SparkSession, path: str, name: str) -> list:
+    """Rows of metadata sidecar ``<path>/<name>`` (hive partition
+    directories become columns); raises when it holds no parquet."""
+    fs, root = _meta(spark, path)
+    return sidecars.read_table(fs, f"{root}/{name}").to_pylist()
 
 
 def _driver_sidecar_table(
     spark: SparkSession, path: str, name: str, ts_mode: str = "local"
 ):
-    """A metadata sidecar as a pyarrow Table read in the driver — or
-    None when the caller must use the distributed read (remote
-    filesystem, or sidecar above the size cap). Raises when the
-    directory exists but holds no readable parquet, matching the
-    distributed read's behavior on half-written metadata (callers'
-    except-paths and bootstrap guards rely on the error).
+    """A sidecar as a pyarrow Table read in the driver — or None when
+    it is above the size cap and the caller must use the distributed
+    read (the data-sized delete sidecars). Raises when the directory holds no readable
+    parquet (half-written metadata; callers' except-paths rely on it).
 
-    ``ts_mode`` picks the timestamp convention for tz-naive columns
-    (pyarrow yields UTC walls; see ``_normalize_arrow_timestamps``):
-    ``"local"`` (default) converts to process-local naive walls — the
-    ``collect()`` convention, for ``to_pylist`` consumers whose values
-    are compared against collected rows or re-enter via tuple
-    ``createDataFrame``; ``"aware"`` casts to tz-aware UTC — for the
-    ``to_pandas`` -> ``createDataFrame(pdf)`` path, where Arrow
-    interprets NAIVE walls in the session tz (not the process tz) and
-    only aware values are unambiguous under both engine paths."""
-    import os
-
-    local = _local_metadata_dir(spark, path, name)
-    if local is None:
-        return None
-    import pyarrow.dataset as pds
-
-    total = 0
-    n_files = 0
-    for root, dirs, files_ in os.walk(local):
-        # prune hidden/temp SUBTREES (e.g. a crashed writer's
-        # _temporary/), matching pyarrow's per-segment ignore_prefixes
-        # — otherwise wreckage part-files count toward n_files/the cap
-        # while the dataset discovery below ignores them
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in files_:
-            if f.startswith(("_", ".")) or not f.endswith(".parquet"):
-                continue
-            total += os.path.getsize(os.path.join(root, f))
-            n_files += 1
-    if total > _DRIVER_METADATA_CAP:
-        return None
-    if n_files == 0:
-        raise IOError(
-            f"{local} exists but holds no parquet files — empty or "
-            "half-written metadata sidecar"
-        )
-    # default ignore_prefixes ('_', '.') skips _SUCCESS/_temporary,
-    # matching Spark's FileIndex convention
-    dset = pds.dataset(local, format="parquet", partitioning="hive")
-    return _normalize_arrow_timestamps(dset.to_table(), ts_mode)
+    ``ts_mode`` picks the timestamp convention (see
+    ``_normalize_arrow_timestamps``): ``"local"`` (default) converts to
+    process-local naive walls — the ``collect()`` convention, for
+    ``to_pylist`` consumers whose values are compared against collected
+    rows or re-enter via tuple ``createDataFrame``; ``"aware"`` casts to
+    tz-aware UTC — for the ``to_pandas`` -> ``createDataFrame(pdf)``
+    path, where Arrow interprets NAIVE walls in the session tz (not the
+    process tz) and only aware values are unambiguous."""
+    fs, root = _meta(spark, path)
+    tbl = sidecars.read_table(
+        fs, f"{root}/{name}", max_bytes=_DRIVER_METADATA_CAP
+    )
+    return None if tbl is None else _normalize_arrow_timestamps(tbl, ts_mode)
 
 
 def _normalize_arrow_timestamps(tbl, ts_mode: str = "local"):
-    """Normalize tz-naive timestamp columns away from pyarrow's UTC
-    walls (ADVICE r11).
+    """Normalize timestamp columns to the conventions of Spark's Python
+    conversions (ADVICE r11).
 
     pyarrow reads Spark-written parquet timestamps as tz-NAIVE UTC
-    wall clocks, but the distributed twin of every driver read is
-    ``collect()`` — whose Python converter yields tz-naive
-    PROCESS-LOCAL walls — while ``createDataFrame`` over a PANDAS
-    frame (Arrow-enabled, the repo default) interprets naive walls in
-    the SESSION tz. On a non-UTC driver the un-normalized local-frame
-    path therefore shifts timestamp-typed tombstone keys and zone-map
-    bounds by the tz offset relative to the distributed fallback —
-    deletes silently miss (or hit wrong) rows and MoR victim pruning
-    skips files.
+    wall clocks and driver-written ones as tz-aware UTC, but
+    ``collect()`` yields tz-naive PROCESS-LOCAL walls, while
+    ``createDataFrame`` over a PANDAS frame (Arrow-enabled, the repo
+    default) interprets naive walls in the SESSION tz. Un-normalized,
+    a non-UTC driver would shift timestamp-typed tombstone keys and
+    zone-map bounds by the tz offset — deletes silently miss (or hit
+    wrong) rows and MoR victim pruning skips files.
 
     ``ts_mode="local"``: per-value conversion through the epoch to
     process-local naive walls (DST resolved per instant, exactly like
@@ -183,26 +161,56 @@ def _normalize_arrow_timestamps(tbl, ts_mode: str = "local"):
         sec = int(
             v.replace(tzinfo=_dt.timezone.utc, microsecond=0).timestamp()
         )
-        return _dt.datetime.fromtimestamp(sec) + _dt.timedelta(
-            microseconds=v.microsecond
+        return _dt.datetime.fromtimestamp(sec).replace(
+            microsecond=v.microsecond
         )
 
     out = tbl
     for i, f in enumerate(tbl.schema):
-        if not (pa.types.is_timestamp(f.type) and f.type.tz is None):
+        if not pa.types.is_timestamp(f.type):
             continue
+        # UTC walls, naive: an aware column drops its zone
+        col = out.column(i).cast(pa.timestamp(f.type.unit))
         if ts_mode == "aware":
-            out = out.set_column(
-                i,
-                f.name,
-                out.column(i).cast(pa.timestamp(f.type.unit, "UTC")),
-            )
+            col = col.cast(pa.timestamp(f.type.unit, "UTC"))
         else:
-            vals = [_to_local_wall(v) for v in out.column(i).to_pylist()]
-            out = out.set_column(
-                i, f.name, pa.array(vals, type=pa.timestamp("us"))
+            col = pa.array(
+                [_to_local_wall(v) for v in col.to_pylist()],
+                type=pa.timestamp("us"),
             )
+        out = out.set_column(i, f.name, col)
     return out
+
+
+def _write_rows(
+    spark: SparkSession, path: str, name: str, rows, schema
+) -> None:
+    """Write Python rows (dicts or Rows, in ``collect()`` conventions)
+    as one driver-side file of sidecar ``<path>/<name>``, typed by the
+    Spark ``schema``. Instants land as ``timestamp[us, UTC]``, taken
+    from the process-local naive walls ``collect()`` and
+    ``_manifest_rows`` yield through the epoch (fold-aware), so they
+    are exact on a non-UTC driver."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    def _epoch_us(v):
+        sec = int(v.replace(microsecond=0).timestamp())
+        return sec * 1_000_000 + v.microsecond
+
+    arrow_schema = to_arrow_schema(schema)
+    cols = []
+    for f in arrow_schema:
+        vals = [r[f.name] for r in rows]
+        if pa.types.is_timestamp(f.type) and f.type.tz is not None:
+            ints = [None if v is None else _epoch_us(v) for v in vals]
+            cols.append(pa.array(ints, pa.int64()).cast(f.type))
+        else:
+            cols.append(pa.array(vals, f.type))
+    fs, root = _meta(spark, path)
+    sidecars.write(
+        fs, f"{root}/{name}", pa.Table.from_arrays(cols, schema=arrow_schema)
+    )
 
 
 def _local_sidecar_rows(
@@ -215,21 +223,17 @@ def _local_sidecar_rows(
 ):
     """Shared driver-read + visibility filter for the delete sidecars
     (tombstones AND DV runs — one implementation so the two paths
-    cannot drift). Returns ``(status, pdf, vis)`` — ``vis`` is the
-    visible-interval list (None only when it was never computed), so
-    the "big" fallback path reuses it instead of re-probing
-    ``_restores``:
+    cannot drift). Returns ``(status, pdf, vis)``, ``vis`` being the
+    visible-interval list the "big" path filters with:
 
     - ``("none", None, ...)``: sidecar absent/unreadable, or no rows
       survive the visibility/origin filters — the caller returns None
       with ZERO Spark jobs spent.
     - ``("local", pdf, vis)``: survivors fit ``max_rows`` — enter the
       plan as a local frame.
-    - ``("big", None, vis)``: survivors exceed ``max_rows`` — the
-      caller must use the distributed scan, but non-emptiness is
-      already known (no limit-count probe needed).
-    - ``("fallback", None, None)``: remote filesystem or oversized
-      sidecar — full distributed path including the emptiness probe.
+    - ``("big", None, vis)``: survivors exceed ``max_rows``, or the
+      sidecar is above the driver size cap — the caller filters the
+      distributed scan by ``vis`` (no emptiness probe).
     """
     if not _sidecar_exists(spark, path, sidecar):
         return "none", None, None
@@ -239,9 +243,9 @@ def _local_sidecar_rows(
         tbl = _driver_sidecar_table(spark, path, sidecar, ts_mode="aware")
     except Exception:
         return "none", None, None
-    if tbl is None:
-        return "fallback", None, None
     vis = _visible_intervals(spark, path, version)
+    if tbl is None:
+        return "big", None, vis
     pdf = tbl.to_pandas()
     keep = pdf["v"].map(lambda v: any(lo < v <= hi for lo, hi in vis))
     if min_origin is not None:
@@ -255,6 +259,20 @@ def _local_sidecar_rows(
     return "local", pdf, vis
 
 
+def _visible_sidecar_scan(
+    spark: SparkSession, path: str, sidecar: str, vis, min_origin=None
+) -> DataFrame:
+    """Distributed scan of a delete sidecar restricted to the visible
+    version intervals (the "big" path of ``_local_sidecar_rows``)."""
+    cond = F.lit(False)
+    for lo, hi in vis:
+        cond = cond | ((F.col("v") > lo) & (F.col("v") <= hi))
+    out = spark.read.parquet(f"{path}/{sidecar}").filter(cond)
+    if min_origin is not None:
+        out = out.filter(F.col("v") > min_origin)
+    return out
+
+
 def _is_path_exists_error(e: Exception) -> bool:
     """True when a write failed because the target path already exists
     — the version-claim collision signal under ``errorifexists``
@@ -263,7 +281,10 @@ def _is_path_exists_error(e: Exception) -> bool:
     DRIVER-side AnalysisException type, not just the phrase: an
     executor-side FileAlreadyExistsException from a task retry also
     says 'already exists' but is a genuine write failure, not a lost
-    claim, and must propagate."""
+    claim, and must propagate. A driver-side sidecar write signals the
+    same collision with ``sidecars.SidecarExistsError``."""
+    if isinstance(e, sidecars.SidecarExistsError):
+        return True
     try:
         from pyspark.errors import AnalysisException
     except ImportError:  # pragma: no cover - very old pyspark
@@ -432,8 +453,8 @@ def _await_claim_release(
         try:
             latest = _latest_version(spark, path) or 0
         except Exception:
-            # the winner is mid-commit: its _manifest dir can exist in
-            # a transiently unreadable state (only _temporary inside).
+            # the winner is mid-commit: its _manifest dir can exist
+            # before its first version is visible (temp files only).
             # Outwaiting exactly that state is this loop's job, so keep
             # polling; persistent corruption still surfaces as a False
             # return -> CommitConflict at the caller.
@@ -445,44 +466,18 @@ def _await_claim_release(
         time.sleep(0.25)
 
 
-def _committed_versions(local_manifest_dir: str) -> list[int]:
-    """Committed versions from the PARTITION LAYOUT alone: a ``v=N``
-    dir counts only when it holds at least one parquet file (a crashed
-    writer's ``_temporary``-only dir contributes no rows to the
-    distributed read either — same semantics, zero bytes read)."""
-    import os
-
-    out = []
-    for name in os.listdir(local_manifest_dir):
-        if not name.startswith("v="):
-            continue
-        try:
-            v = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        sub = os.path.join(local_manifest_dir, name)
-        if any(
-            f.endswith(".parquet") and not f.startswith(("_", "."))
-            for f in os.listdir(sub)
-        ):
-            out.append(v)
-    return sorted(out)
-
-
 def versions(spark: SparkSession, path: str) -> list[int]:
     """Snapshot versions present at ``path``, ascending — answered
-    from the manifest PARTITION LISTING when the filesystem is local
-    (zero data bytes read; the distributed path reads rows)."""
-    local = _local_metadata_dir(spark, path, "_manifest")
-    if local is not None:
-        return _committed_versions(local)
-    vs = (
-        spark.read.parquet(f"{path}/_manifest")
-        .select("v")
-        .distinct()
-        .collect()
-    )
-    return sorted(int(r["v"]) for r in vs)
+    from the manifest PARTITION LISTING (zero data bytes read)."""
+    return sidecars.committed_versions(*_meta(spark, path))
+
+
+def _head_version(spark: SparkSession, path: str) -> int:
+    """Latest committed version; raises on a path holding no table."""
+    v = _latest_version(spark, path)
+    if v is None:
+        raise ValueError(f"no manifest table at {path}")
+    return v
 
 
 def _latest_version(
@@ -491,11 +486,10 @@ def _latest_version(
     """Latest committed version at ``path``, or None for a brand-new
     table. "New table" is decided by a filesystem EXISTENCE probe on
     the manifest directory, never by catching the read error: a
-    manifest that EXISTS but fails to read (transient listing failure,
-    corruption, a crashed first writer's ``_temporary`` wreckage) must
-    RAISE — the old ``except Exception: version = 1`` bootstrap would
-    misread it as "first snapshot" and fork a parallel v=1 history
-    over live data (VERDICT r9 item 3)."""
+    manifest that EXISTS but holds no committed version (a crashed
+    first writer's wreckage) must RAISE — the old ``except Exception:
+    version = 1`` bootstrap would misread it as "first snapshot" and
+    fork a parallel v=1 history over live data (VERDICT r9 item 3)."""
     if not _sidecar_exists(spark, path, manifest_dir):
         return None
     if manifest_dir == "_manifest":
@@ -503,17 +497,7 @@ def _latest_version(
         # the primary manifest (tests simulate stale reads there)
         vs = versions(spark, path)
     else:
-        tbl = _driver_sidecar_table(spark, path, manifest_dir)
-        if tbl is not None:
-            vs = sorted({int(v) for v in tbl.column("v").to_pylist()})
-        else:
-            vs = sorted(
-                int(r["v"])
-                for r in spark.read.parquet(f"{path}/{manifest_dir}")
-                .select("v")
-                .distinct()
-                .collect()
-            )
+        vs = sidecars.committed_versions(*_meta(spark, path), manifest_dir)
     if not vs:
         raise IOError(
             f"{path}/{manifest_dir} exists but holds no versions — "
@@ -562,60 +546,37 @@ def write_manifest_table(
     return version
 
 
-def _manifest_rows(spark: SparkSession, path: str, version: int | None):
-    local = _local_metadata_dir(spark, path, "_manifest")
-    if local is not None:
-        # partition-pruned driver read: ONE version's manifest file is
-        # opened — planning stays O(files-per-snapshot) however many
-        # commits the table has accumulated (the whole-dir read was
-        # O(files x versions))
-        import os
-
-        import pyarrow.dataset as pds
-
-        vs = _committed_versions(local)
-        if not vs:
-            raise IOError(
-                f"{local} exists but holds no committed versions"
-            )
-        v = version if version is not None else vs[-1]
-        if v not in vs:
-            # expired by ``expire_snapshots`` or never written — an
-            # error beats silently returning an empty frame
-            raise ValueError(f"no snapshot v={v} at {path}")
-        vdir = os.path.join(local, f"v={v}")
-        tbl = _normalize_arrow_timestamps(
-            pds.dataset(vdir, format="parquet").to_table()
-        )
-        return tbl.to_pylist(), v
-    rows = spark.read.parquet(f"{path}/_manifest").collect()
-    vs = sorted({int(r["v"]) for r in rows})
+def _manifest_table(spark: SparkSession, path: str, version: int | None):
+    """(pyarrow Table, version) of one snapshot's manifest as stored —
+    the latest when ``version`` is None. Only that version's file is
+    opened, so planning stays O(files-per-snapshot) however many
+    commits the table has accumulated."""
+    fs, root = _meta(spark, path)
+    vs = sidecars.committed_versions(fs, root)
+    if not vs:
+        raise IOError(f"{path}/_manifest holds no committed versions")
     v = version if version is not None else vs[-1]
     if v not in vs:
+        # expired by ``expire_snapshots`` or never written — an error
+        # beats silently returning an empty frame
         raise ValueError(f"no snapshot v={v} at {path}")
-    return [r for r in rows if int(r["v"]) == v], v
+    return sidecars.read_table(fs, f"{root}/_manifest/v={v}"), v
 
 
-def _carried_manifest_df(spark: SparkSession, path: str, manifest):
-    """Prior manifest rows re-entering the plan as a local frame,
-    typed by the STORED manifest schema (a footer-only schema read —
-    zero Spark jobs; the hive partition column ``v`` is stripped).
-    The old hard-coded ``min_v bigint`` schema crashed every
-    carried-manifest commit (delete/MoR/restore/clone/shard) on a
-    string/date/timestamp-keyed table — min_v/max_v carry the SORT
-    column's type (found by the r12 non-UTC timestamp lifecycle
-    test, tests/test_manifest_tz.py)."""
-    from pyspark.sql.types import StructType
+def _manifest_rows(spark: SparkSession, path: str, version: int | None):
+    tbl, v = _manifest_table(spark, path, version)
+    return _normalize_arrow_timestamps(tbl).to_pylist(), v
 
-    stored = spark.read.parquet(f"{path}/_manifest").schema
-    schema = StructType([f for f in stored.fields if f.name != "v"])
-    return spark.createDataFrame(
-        [
-            (r["file"], r["min_v"], r["max_v"], r["n_rows"])
-            for r in manifest
-        ],
-        schema,
-    )
+
+def _copy_manifest(
+    spark: SparkSession, src: str, src_v: int, dst: str, dst_v: int
+) -> None:
+    """Metadata-only commit: snapshot ``src_v``'s manifest carried
+    VERBATIM as ``dst_v`` (the stored arrow table is rewritten as-is,
+    so ``min_v``/``max_v`` keep the sort column's type)."""
+    tbl, _ = _manifest_table(spark, src, src_v)
+    fs, root = _meta(spark, dst)
+    sidecars.write(fs, f"{root}/_manifest/v={dst_v}", tbl)
 
 
 def _commit_manifest(
@@ -627,15 +588,10 @@ def _commit_manifest(
     carried=(),
 ) -> None:
     """Derive the just-written files' zone map in ONE PARALLEL job and
-    commit the manifest as a LOCAL frame (VERDICT r10 item 4). The
-    previous shape ran ``coalesce(1)`` on the zone-map AGGREGATE —
-    coalesce inserts no shuffle, so the single output task re-ran the
-    whole data read-back serially (measured 6.7 s of a MoR commit's
-    8.4 s manifest phase at sf0.1); collecting the file-count-sized
-    zone map and writing it as a driver frame makes the read-back
-    parallel and the write trivial. ``carried``: prior manifest rows
-    (Rows or dicts) carried forward verbatim."""
-    _write_manifest_local(
+    write carried + new manifest rows on the driver (VERDICT r10 item
+    4). ``carried``: prior manifest rows (Rows or dicts) carried
+    forward verbatim."""
+    _write_manifest(
         spark, path, version, carried, _zone_map(spark, data_dir, sort_col)
     )
 
@@ -658,28 +614,20 @@ def _zone_map(spark: SparkSession, data_dir: str, sort_col: str):
     )
 
 
-def _write_manifest_local(
+def _write_manifest(
     spark: SparkSession,
     path: str,
     version: int,
     carried,
-    zm,
+    zm: DataFrame,
     manifest_dir: str = "_manifest",
 ) -> None:
     """Collect the zone-map aggregate ``zm`` (file-count rows) and
-    write carried + new manifest rows as one LOCAL frame. The zone
-    map's own schema carries the sort column's type (string/date
-    tables must not coerce to bigint)."""
-    rows = [
-        (r["file"], r["min_v"], r["max_v"], int(r["n_rows"]))
-        for r in carried
-    ] + [
-        (r["file"], r["min_v"], r["max_v"], int(r["n_rows"]))
-        for r in zm.collect()
-    ]
-    spark.createDataFrame(rows, zm.schema).repartition(1).write.mode(
-        "errorifexists"
-    ).parquet(f"{path}/{manifest_dir}/v={version}")
+    write carried + new manifest rows as one driver-side file, typed by
+    the zone map's schema (the sort column's type: string/date tables
+    must not coerce to bigint)."""
+    rows = list(carried) + zm.collect()
+    _write_rows(spark, path, f"{manifest_dir}/v={version}", rows, zm.schema)
 
 
 def read_pruned(
@@ -932,8 +880,8 @@ def append_snapshot(
         try:
             prev = _latest_version(spark, path)
         except Exception:
-            # _manifest exists but is transiently unreadable — another
-            # writer is mid-FIRST-commit (only _temporary inside). Poll
+            # _manifest exists but holds no version yet — another
+            # writer is mid-FIRST-commit (temp files only). Poll
             # for its manifest like a lost claim and re-read; genuine
             # corruption exhausts the retries and propagates.
             if _attempt == max_retries or not _await_claim_release(
@@ -1189,46 +1137,49 @@ def build_manifest_list(
     shards whose aggregate interval overlaps the predicate band, and
     never touches the rest of the metadata — so plan cost scales with
     the band's share of the table, not the table's file count.
-    Returns the number of shard files written."""
-    manifest, v = _manifest_rows(spark, path, version)
-    rows = _carried_manifest_df(spark, path, manifest)
-    shards_dir = f"{path}/_manifest_shards/v={v}"
-    (
-        rows.repartitionByRange(num_shards, "min_v")
-        .sortWithinPartitions("min_v")
-        .write.mode("errorifexists")
-        .parquet(shards_dir)
+    Returns the number of shard files written. Driver-side: zero Spark
+    jobs."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    tbl, v = _manifest_table(spark, path, version)
+    tbl = tbl.sort_by("min_v")
+    n = tbl.num_rows
+    k = min(num_shards, n)
+    shards = [
+        tbl.slice(i * n // k, (i + 1) * n // k - i * n // k) for i in range(k)
+    ]
+    qualified = _qualified(spark, path)
+    fs, root = sidecars.resolve(qualified)
+    written = sidecars.write(fs, f"{root}/_manifest_shards/v={v}", *shards)
+    listing = pa.table(
+        {
+            "shard_file": pa.array(
+                [f"{qualified}{p[len(root):]}" for p in written], pa.string()
+            ),
+            "shard_min": pa.array(
+                [pc.min(s["min_v"]).as_py() for s in shards],
+                tbl.schema.field("min_v").type,
+            ),
+            "shard_max": pa.array(
+                [pc.max(s["max_v"]).as_py() for s in shards],
+                tbl.schema.field("max_v").type,
+            ),
+            "n_files": pa.array([s.num_rows for s in shards], pa.int64()),
+            "n_rows": pa.array(
+                [pc.sum(s["n_rows"]).as_py() for s in shards], pa.int64()
+            ),
+        }
     )
-    listing = (
-        spark.read.parquet(shards_dir)
-        .select(
-            F.input_file_name().alias("shard_file"),
-            "min_v",
-            "max_v",
-            "n_rows",
-        )
-        .groupBy("shard_file")
-        .agg(
-            F.min("min_v").alias("shard_min"),
-            F.max("max_v").alias("shard_max"),
-            F.count(F.lit(1)).alias("n_files"),
-            F.sum("n_rows").alias("n_rows"),
-        )
-    )
-    listing.repartition(1).write.mode("errorifexists").parquet(
-        f"{path}/_manifest_list/v={v}"
-    )
-    return spark.read.parquet(f"{path}/_manifest_list/v={v}").count()
+    sidecars.write(fs, f"{root}/_manifest_list/v={v}", listing)
+    return k
 
 
 def _list_rows(spark: SparkSession, path: str, version: int | None):
-    tbl = _driver_sidecar_table(spark, path, "_manifest_list")
-    if tbl is not None:
-        rows = tbl.to_pylist()
-    else:
-        rows = spark.read.parquet(f"{path}/_manifest_list").collect()
     v = version if version is not None else versions(spark, path)[-1]
-    return [r for r in rows if int(r["v"]) == v], v
+    fs, root = _meta(spark, path)
+    tbl = sidecars.read_table(fs, f"{root}/_manifest_list/v={v}")
+    return _normalize_arrow_timestamps(tbl).to_pylist(), v
 
 
 def read_pruned_two_tier(
@@ -1258,7 +1209,18 @@ def read_pruned_two_tier(
     band = (F.col(sort_col) >= F.lit(lo)) & (F.col(sort_col) <= F.lit(hi))
     if not shard_files:
         return spark.read.parquet(f"{path}/v={v}").filter(F.lit(False))
-    manifest = spark.read.parquet(*shard_files).collect()
+    import pyarrow.dataset as pds
+
+    fs, root = _meta(spark, path)
+    opened = pds.dataset(
+        [
+            f"{root}/_manifest_shards/v={v}/{f.rsplit('/', 1)[-1]}"
+            for f in shard_files
+        ],
+        filesystem=fs,
+        format="parquet",
+    )
+    manifest = _normalize_arrow_timestamps(opened.to_table()).to_pylist()
     keep = [
         r["file"]
         for r in manifest
@@ -1313,12 +1275,7 @@ def _schema_events(spark: SparkSession, path: str, version: int):
     if not _sidecar_exists(spark, path, "_schema_events"):
         return []
     try:
-        tbl = _driver_sidecar_table(spark, path, "_schema_events")
-        all_rows = (
-            tbl.to_pylist()
-            if tbl is not None
-            else spark.read.parquet(f"{path}/_schema_events").collect()
-        )
+        all_rows = _sidecar_rows(spark, path, "_schema_events")
     except Exception:
         return []
     vis = _visible_intervals(spark, path, version)
@@ -1331,20 +1288,22 @@ def _schema_events(spark: SparkSession, path: str, version: int):
 def _append_schema_event(
     spark: SparkSession, path: str, kind: str, **fields
 ) -> int:
-    manifest, prev = _manifest_rows(spark, path, None)
+    import pyarrow as pa
+
+    prev = _head_version(spark, path)
     version = prev + 1
     if not _claim_version(spark, path, version):
         raise CommitConflict(
             f"schema event at {path} lost the claim for v={version}"
         )
-    row = {
-        "v": version,
-        "kind": kind,
-        "name": fields.get("name"),
-        "old_name": fields.get("old_name"),
-        "dtype": fields.get("dtype"),
-        "default_sql": fields.get("default_sql"),
-    }
+    row = {"kind": kind, **fields}
+    event = pa.table(
+        {"v": pa.array([version], pa.int64())}
+        | {
+            c: pa.array([row.get(c)], pa.string())
+            for c in ("kind", "name", "old_name", "dtype", "default_sql")
+        }
+    )
     # ORDER MATTERS: manifest before event row. Claims are released on
     # failure now, so a later writer can legitimately re-mint this
     # version id — an event row stranded by a manifest-write failure
@@ -1353,18 +1312,12 @@ def _append_schema_event(
     # merely leaves a no-op metadata version and raises; the caller
     # retries and the event lands at version+1.
     try:
-        carried = _carried_manifest_df(spark, path, manifest)
-        carried.repartition(1).write.mode("errorifexists").parquet(
-            f"{path}/_manifest/v={version}"
-        )
+        _copy_manifest(spark, path, prev, path, version)
     except Exception:
         _abort_claim(spark, path, version)
         raise
-    spark.createDataFrame(
-        [tuple(row.values())],
-        "v bigint, kind string, name string, old_name string, "
-        "dtype string, default_sql string",
-    ).repartition(1).write.mode("append").parquet(f"{path}/_schema_events")
+    fs, root = _meta(spark, path)
+    sidecars.write(fs, f"{root}/_schema_events", event, append=True)
     return version
 
 
@@ -1549,22 +1502,7 @@ def _delete_keys(
         return None
     if status == "local":
         return spark.createDataFrame(pdf)
-    try:
-        dels = spark.read.parquet(f"{path}/_deletes")
-    except Exception:
-        return None
-    if vis is None:  # fallback path never computed the intervals
-        vis = _visible_intervals(spark, path, version)
-    cond = None
-    for lo, hi in vis:
-        c = (F.col("v") > lo) & (F.col("v") <= hi)
-        cond = c if cond is None else (cond | c)
-    dels = dels.filter(cond if cond is not None else F.lit(False))
-    if min_origin is not None:
-        dels = dels.filter(F.col("v") > min_origin)
-    if status == "big":
-        return dels  # non-emptiness already known driver-side
-    return dels if dels.limit(1).count() else None
+    return _visible_sidecar_scan(spark, path, "_deletes", vis, min_origin)
 
 
 def _apply_tombstones(out: DataFrame, dels: DataFrame, key: str) -> DataFrame:
@@ -1626,7 +1564,7 @@ def delete_from_snapshot(
     table (deletes are predicate/key-scoped, so the retry is a fresh
     call, not a replay).
     """
-    manifest, prev = _manifest_rows(spark, path, None)
+    prev = _head_version(spark, path)
     version = prev + 1
     if not _claim_version(spark, path, version):
         raise CommitConflict(
@@ -1646,13 +1584,10 @@ def delete_from_snapshot(
         # an EMPTY key frame writes no partition dir — capture that
         # now so the pre-commit verify knows not to demand one
         wrote = _sidecar_partition_exists(spark, path, "_deletes", version)
-        carried = _carried_manifest_df(spark, path, manifest)
         _verify_sidecar_before_commit(
             spark, path, "_deletes", version, wrote=wrote
         )
-        carried.repartition(1).write.mode("errorifexists").parquet(
-            f"{path}/_manifest/v={version}"
-        )
+        _copy_manifest(spark, path, prev, path, version)
     except Exception as e:
         _purge_sidecar_partition(spark, path, "_deletes", version)
         if _is_path_exists_error(e):
@@ -1693,15 +1628,10 @@ def _restore_map(spark: SparkSession, path: str) -> dict[int, int]:
     if not _sidecar_exists(spark, path, "_restores"):
         return {}
     try:
-        # exists but unreadable (crashed writer left only _temporary/,
+        # exists but unreadable (crashed writer left only temp files,
         # or an empty dir) degrades to "no restores", not a crash on
         # every subsequent snapshot read
-        tbl = _driver_sidecar_table(spark, path, "_restores")
-        rows = (
-            tbl.to_pylist()
-            if tbl is not None
-            else spark.read.parquet(f"{path}/_restores").collect()
-        )
+        rows = _sidecar_rows(spark, path, "_restores")
     except Exception:
         return {}
     return {int(r["v"]): int(r["source_v"]) for r in rows}
@@ -1750,17 +1680,14 @@ def _visible_intervals(
 # ---------------------------------------------------------------------------
 def _ref_log(spark: SparkSession, path: str) -> list:
     # DELIBERATELY no except-path (unlike _restore_map): an existing
-    # but unreadable _refs raises, on the driver path (the empty-census
-    # IOError) exactly as on the distributed one. Degrading to [] here
+    # but unreadable _refs raises (the sidecar read's IOError on a
+    # directory holding no parquet). Degrading to [] here
     # would tell expire_snapshots the table has NO tags — retention GC
     # could then delete versions the user believes pinned. Corrupt tag
     # logs must surface, not vanish.
     if not _sidecar_exists(spark, path, "_refs"):
         return []
-    tbl = _driver_sidecar_table(spark, path, "_refs")
-    if tbl is not None:
-        return tbl.to_pylist()
-    return spark.read.parquet(f"{path}/_refs").collect()
+    return _sidecar_rows(spark, path, "_refs")
 
 
 def _append_ref(
@@ -1778,20 +1705,25 @@ def _append_ref(
     the same K — the op takes K+1; skipped seqs are harmless (resolve
     = max seq per name), so stale refseq claims cannot wedge anything
     and are never swept."""
+    import pyarrow as pa
+
     from .claims import get_claim_backend
 
     backend = get_claim_backend()
+    fs, root = _meta(spark, path)
+    event = pa.table(
+        {
+            "name": pa.array([name], pa.string()),
+            "version": pa.array([version], pa.int64()),
+        }
+    )
     seq = 1 + max((int(r["seq"]) for r in _ref_log(spark, path)), default=0)
     for _ in range(8):
         if not backend.claim(spark, path, f"refseq={seq}"):
             seq += 1  # lost the seq claim to a concurrent tag op
             continue
         try:
-            spark.createDataFrame(
-                [(name, version)], "name string, version bigint"
-            ).repartition(1).write.mode("errorifexists").parquet(
-                f"{path}/_refs/seq={seq}"
-            )
+            sidecars.write(fs, f"{root}/_refs/seq={seq}", event)
             return
         except Exception as e:
             if not _is_path_exists_error(e):
@@ -1861,6 +1793,8 @@ def restore_snapshot(
     every intermediate version still time-travels, and new writes /
     deletes / ALTERs after the restore apply normally. Returns the new
     version."""
+    import pyarrow as pa
+
     manifest, _ = _manifest_rows(spark, path, source_version)
     latest = versions(spark, path)[-1]
     if not manifest:
@@ -1879,16 +1813,18 @@ def restore_snapshot(
     # without its restore row is merely a plain metadata append — the
     # raise tells the caller the restore failed; retry lands it fully.
     try:
-        carried = _carried_manifest_df(spark, path, manifest)
-        carried.repartition(1).write.mode("errorifexists").parquet(
-            f"{path}/_manifest/v={version}"
-        )
+        _copy_manifest(spark, path, source_version, path, version)
     except Exception:
         _abort_claim(spark, path, version)
         raise
-    spark.createDataFrame(
-        [(version, source_version)], "v bigint, source_v bigint"
-    ).repartition(1).write.mode("append").parquet(f"{path}/_restores")
+    fs, root = _meta(spark, path)
+    restore = pa.table(
+        {
+            "v": pa.array([version], pa.int64()),
+            "source_v": pa.array([source_version], pa.int64()),
+        }
+    )
+    sidecars.write(fs, f"{root}/_restores", restore, append=True)
     return version
 
 
@@ -1920,17 +1856,14 @@ def shallow_clone(spark: SparkSession, src: str, dst: str) -> int:
         raise ValueError(
             f"shallow_clone target {dst} already holds a table"
         )
-    manifest, v = _manifest_rows(spark, src, None)
+    v = _head_version(spark, src)
     if not _claim_version(spark, dst, v):
         raise CommitConflict(
             f"shallow_clone to {dst} lost the claim for v={v}; another "
             "writer is bootstrapping the same target"
         )
     try:
-        carried = _carried_manifest_df(spark, src, manifest)
-        carried.repartition(1).write.mode("errorifexists").parquet(
-            f"{dst}/_manifest/v={v}"
-        )
+        _copy_manifest(spark, src, v, dst, v)
         sfs, jvm = _fs(spark, src)
         dfs, _ = _fs(spark, dst)
         conf = spark._jsc.hadoopConfiguration()
@@ -1972,16 +1905,6 @@ def shallow_clone(spark: SparkSession, src: str, dst: str) -> int:
     return v
 
 
-def _fs(spark: SparkSession, path: str):
-    """Hadoop FileSystem for ``path`` — works for local paths, file://
-    and any configured remote scheme (the scale-correct deletion API;
-    never shell out or assume a local mount)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jvm
-
-
 def _norm_uri(u: str) -> str:
     """Scheme-insensitive file identity (input_file_name yields
     file:///a/b, Hadoop Path prints file:/a/b — same file)."""
@@ -1989,6 +1912,19 @@ def _norm_uri(u: str) -> str:
 
     p = urlparse(u)
     return p.path if p.scheme else u
+
+
+def _norm_uri_col(col: str) -> Column:
+    """``_norm_uri`` as a Column expression: strips ``scheme://authority``
+    or ``scheme:`` so ``_metadata.file_path`` (file:/x) and manifest
+    paths (file:///x) compare equal."""
+    return F.regexp_replace(
+        F.regexp_replace(
+            F.col(col), r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/]*", ""
+        ),
+        r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/",
+        "/",
+    )
 
 
 def expire_snapshots(
@@ -2101,16 +2037,9 @@ def expire_snapshots(
             [(f,) for f in sorted({_norm_uri(f) for f in referenced_raw})],
             "nfile string",
         )
-        norm_expr = F.regexp_replace(
-            F.regexp_replace(
-                F.col("file"), r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/]*", ""
-            ),
-            r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/",
-            "/",
-        )
         kept_rows = (
             spark.read.parquet(f"{path}/_posdeletes")
-            .withColumn("_nfile", norm_expr)
+            .withColumn("_nfile", _norm_uri_col("file"))
             .join(
                 ref_norm,
                 F.col("_nfile") == F.col("nfile"),
@@ -2179,7 +2108,7 @@ def stage_snapshot(
         carried = (
             _manifest_rows(spark, path, prev)[0] if prev is not None else ()
         )
-        _write_manifest_local(
+        _write_manifest(
             spark,
             path,
             version,
@@ -2226,12 +2155,8 @@ def read_staged(
         _with_positions,
     )
 
-    manifest = [
-        r
-        for r in spark.read.parquet(f"{path}/_staged_manifest").collect()
-        if int(r["v"]) == version
-    ]
-    files = [r["file"] for r in manifest]
+    staged = _sidecar_rows(spark, path, f"_staged_manifest/v={version}")
+    files = [r["file"] for r in staged]
     out = spark.read.parquet(*files)
     runs = _pos_delete_runs(spark, path, version)
     if runs is not None:
@@ -2324,19 +2249,8 @@ def stage_branch(
         .write.mode("errorifexists")
         .parquet(data_dir)
     )
-    rows = (
-        spark.read.parquet(data_dir)
-        .select(
-            F.input_file_name().alias("file"),
-            F.col(sort_col).alias("v_"),
-        )
-        .groupBy("file")
-        .agg(
-            F.min("v_").alias("min_v"),
-            F.max("v_").alias("max_v"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .withColumn("base_v", F.lit(base))
+    rows = _zone_map(spark, data_dir, sort_col).withColumn(
+        "base_v", F.lit(base)
     )
     # One aggregate pass: the zone map is O(num_files) rows, so collect
     # it (the same driver-planning bound every manifest operation has),
@@ -2354,9 +2268,9 @@ def stage_branch(
         raise ValueError(
             f"empty branch {branch!r}: staged DataFrame has no rows"
         )
-    spark.createDataFrame(rows_local, rows.schema).repartition(1).write.mode(
-        "errorifexists"
-    ).parquet(f"{path}/_branches/{branch}/manifest")
+    _write_rows(
+        spark, path, f"_branches/{branch}/manifest", rows_local, rows.schema
+    )
     return base
 
 
@@ -2372,8 +2286,14 @@ def publish_branch(
     on top of the REAL latest), and ``(None, "conflict")`` when an
     interval overlaps OR another publisher claimed the target version
     first (the branch stays staged for abort/retry)."""
-    staged_df = spark.read.parquet(f"{path}/_branches/{branch}/manifest")
-    staged = staged_df.collect()
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    meta_fs, root = _meta(spark, path)
+    staged_tbl = sidecars.read_table(
+        meta_fs, f"{root}/_branches/{branch}/manifest"
+    )
+    staged = _normalize_arrow_timestamps(staged_tbl).to_pylist()
     if not staged:
         # Defense for branches staged by older code (stage_branch now
         # rejects empty DataFrames at stage time).
@@ -2437,42 +2357,21 @@ def publish_branch(
                 "retrying"
             )
         return None, "conflict"
-    moved = [
-        (
-            s["file"].replace("/_branches/" + branch + "/data/", f"/v={new_v}/"),
-            s["min_v"],
-            s["max_v"],
-            s["n_rows"],
-        )
-        for s in staged
-    ]
-    # Derive the zone-map schema from what stage_branch actually wrote
-    # (min_v/max_v carry the sort column's own type — a string- or
-    # date-keyed table must not be coerced to bigint here).
-    new_rows = spark.createDataFrame(
-        moved,
-        StructType(
-            [
-                staged_df.schema["file"],
-                staged_df.schema["min_v"],
-                staged_df.schema["max_v"],
-                staged_df.schema["n_rows"],
-            ]
+    # the staged zone map, typed as stage_branch wrote it (min_v/max_v
+    # carry the sort column's own type), with its files at their new home
+    moved = staged_tbl.drop_columns(["base_v"])
+    moved = moved.set_column(
+        0,
+        "file",
+        pc.replace_substring(
+            moved["file"], f"/_branches/{branch}/data/", f"/v={new_v}/"
         ),
     )
     try:
         if latest > 0:
-            carried_local = spark.createDataFrame(
-                [
-                    (r["file"], r["min_v"], r["max_v"], int(r["n_rows"]))
-                    for r in _manifest_rows(spark, path, latest)[0]
-                ],
-                new_rows.schema,
-            )
-            new_rows = carried_local.unionByName(new_rows)
-        new_rows.repartition(1).write.mode("errorifexists").parquet(
-            f"{path}/_manifest/v={new_v}"
-        )
+            carried, _ = _manifest_table(spark, path, latest)
+            moved = pa.concat_tables([carried.cast(moved.schema), moved])
+        sidecars.write(meta_fs, f"{root}/_manifest/v={new_v}", moved)
     except Exception:
         # manifest write failed AFTER the data rename: undo the rename
         # so the branch stays staged (retryable), release the claim so
@@ -2624,15 +2523,8 @@ def snapshot_row_count(
         [(f,) for f in sorted({_norm_uri(f) for f in files})],
         "nfile string",
     )
-    norm_expr = F.regexp_replace(
-        F.regexp_replace(
-            F.col("file"), r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/]*", ""
-        ),
-        r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/",
-        "/",
-    )
     dead = (
-        runs.withColumn("_nfile", norm_expr)
+        runs.withColumn("_nfile", _norm_uri_col("file"))
         .join(F.broadcast(live), F.col("_nfile") == F.col("nfile"), "left_semi")
         .agg(F.sum(F.col("pos_end") - F.col("pos_start") + F.lit(1)))
         .first()[0]

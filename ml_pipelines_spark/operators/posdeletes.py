@@ -79,17 +79,17 @@ def delete_where(
     from .manifest import (
         CommitConflict,
         _abort_claim,
-        _carried_manifest_df,
         _claim_version,
+        _copy_manifest,
+        _head_version,
         _is_path_exists_error,
-        _manifest_rows,
         _purge_sidecar_partition,
         _release_claim,
         _sidecar_partition_exists,
         _verify_sidecar_before_commit,
     )
 
-    manifest, prev = _manifest_rows(spark, path, None)
+    prev = _head_version(spark, path)
     version = prev + 1
     if not _claim_version(spark, path, version):
         raise CommitConflict(
@@ -116,13 +116,10 @@ def delete_where(
         # dir — capture that so the pre-commit verify skips its
         # existence check (the claim check still runs)
         wrote = _sidecar_partition_exists(spark, path, _SIDECAR, version)
-        carried = _carried_manifest_df(spark, path, manifest)
         _verify_sidecar_before_commit(
             spark, path, _SIDECAR, version, wrote=wrote
         )
-        carried.repartition(1).write.mode("errorifexists").parquet(
-            f"{path}/_manifest/v={version}"
-        )
+        _copy_manifest(spark, path, prev, path, version)
     except Exception as e:
         # a stranded _posdeletes/v=N partition would ACTIVATE under the
         # next committed v=N — purge it before the claim goes away
@@ -366,7 +363,7 @@ def _pos_delete_runs(
     count) goes back to the distributed scan — a LocalTableScan
     explodes single-threaded, measured +6 s on the sf0.1 MoR replay
     when ~800k runs rode the local path."""
-    from .manifest import _local_sidecar_rows, _visible_intervals
+    from .manifest import _local_sidecar_rows, _visible_sidecar_scan
 
     status, pdf, vis = _local_sidecar_rows(
         spark, path, _SIDECAR, version, max_rows=_LOCAL_RUNS_MAX
@@ -375,20 +372,7 @@ def _pos_delete_runs(
         return None
     if status == "local":
         return spark.createDataFrame(pdf)
-    try:
-        runs = spark.read.parquet(f"{path}/{_SIDECAR}")
-    except Exception:
-        return None
-    if vis is None:  # fallback path never computed the intervals
-        vis = _visible_intervals(spark, path, version)
-    cond = None
-    for lo, hi in vis:
-        c = (F.col("v") > lo) & (F.col("v") <= hi)
-        cond = c if cond is None else (cond | c)
-    runs = runs.filter(cond if cond is not None else F.lit(False))
-    if status == "big":
-        return runs  # non-emptiness already known driver-side
-    return runs if runs.limit(1).count() else None
+    return _visible_sidecar_scan(spark, path, _SIDECAR, vis)
 
 
 def _with_positions(out: DataFrame) -> DataFrame:

@@ -19,9 +19,12 @@ convenience). Non-append maintenance belongs BEFORE the stream's
 starting version or in a fresh table epoch.
 
 The planning worker has no SparkSession (same constraint as the CVAT
-DataSource, sources/cvat_datasource.py), so manifests are read with
-pyarrow through ``pyarrow.fs`` — local paths and any
-``scheme://`` filesystem pyarrow supports (s3/gcs/hdfs) work alike.
+DataSource, sources/cvat_datasource.py), so it lists and reads the
+table's metadata through ``operators.sidecars`` — the same
+``pyarrow.fs`` path the batch table layer uses on the driver. Local
+paths and any ``scheme://`` filesystem pyarrow supports (s3/gcs/hdfs)
+work alike; any other scheme raises
+``sidecars.UnsupportedFilesystemError``.
 
 Usage::
 
@@ -38,7 +41,6 @@ Output schema = the table's physical schema + ``_commit_version int``
 
 from __future__ import annotations
 
-import re
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import (
@@ -48,51 +50,15 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-_V_RE = re.compile(r"^v=(\d+)$")
+from ..operators.sidecars import committed_versions, read_table
+from ..operators.sidecars import resolve as _fs_and_root
+
 VERSION_COL = "_commit_version"
 
 
-def _fs_and_root(path: str):
-    """(pyarrow FileSystem, root path) for a local path or URI."""
-    import pyarrow.fs as pafs
-
-    if path.startswith("file:"):
-        path = re.sub(r"^file:(//)?", "", path)
-    if "://" in path:
-        return pafs.FileSystem.from_uri(path)
-    return pafs.LocalFileSystem(), path
-
-
-def _committed_versions(fs, root: str, sidecar: str = "_manifest") -> list[int]:
-    """Committed versions under ``root/sidecar`` — a ``v=N`` dir
-    counts only when it holds a parquet file (same layout contract as
-    operators.manifest._committed_versions)."""
-    import pyarrow.fs as pafs
-
-    sel = pafs.FileSelector(f"{root}/{sidecar}", allow_not_found=True)
-    out = []
-    for info in fs.get_file_info(sel):
-        name = info.base_name
-        m = _V_RE.match(name)
-        if not m or info.type != pafs.FileType.Directory:
-            continue
-        files = fs.get_file_info(pafs.FileSelector(info.path))
-        if any(
-            f.base_name.endswith(".parquet")
-            and not f.base_name.startswith(("_", "."))
-            for f in files
-        ):
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
 def _manifest_file_set(fs, root: str, version: int) -> set[str]:
-    import pyarrow.dataset as pds
-
-    dset = pds.dataset(
-        f"{root}/_manifest/v={version}", format="parquet", filesystem=fs
-    )
-    return set(dset.to_table(columns=["file"]).column("file").to_pylist())
+    tbl = read_table(fs, f"{root}/_manifest/v={version}", columns=["file"])
+    return set(tbl.column("file").to_pylist())
 
 
 def _sidecar_versions_in(
@@ -105,37 +71,16 @@ def _sidecar_versions_in(
     zero bytes read), while ``_restores`` / ``_schema_events`` are
     FLAT append dirs whose version is a ``v`` COLUMN — those need a
     one-column read of the (tiny, event-count-sized) sidecar."""
-    import pyarrow.fs as pafs
-
-    parted = _committed_versions(fs, root, sidecar)
+    parted = committed_versions(fs, root, sidecar)
     if parted:
         return [v for v in parted if lo < v <= hi]
-    info = fs.get_file_info(f"{root}/{sidecar}")
-    if info.type != pafs.FileType.Directory:
-        return []
-    import pyarrow.dataset as pds
-
     try:
-        col = (
-            pds.dataset(
-                f"{root}/{sidecar}", format="parquet", filesystem=fs
-            )
-            .to_table(columns=["v"])
-            .column("v")
-            .to_pylist()
-        )
+        col = read_table(fs, f"{root}/{sidecar}", columns=["v"]).column("v")
     except Exception:
-        # exists but unreadable (crashed writer's _temporary only):
+        # absent, or unreadable (a crashed writer's wreckage only): the
         # same degrade-to-empty the batch _restore_map applies
         return []
-    return sorted({int(v) for v in col if lo < int(v) <= hi})
-
-
-def _data_path(file_uri: str, root: str) -> str:
-    """Manifest file URIs come from Spark's input_file_name (absolute,
-    often ``file:``-prefixed); resolve to a pyarrow-readable path."""
-    p = re.sub(r"^file:(//)?", "", file_uri)
-    return p
+    return sorted({int(v) for v in col.to_pylist() if lo < int(v) <= hi})
 
 
 class _FileSlice(InputPartition):
@@ -158,7 +103,7 @@ class _TableAppendsStreamReader(DataSourceStreamReader):
 
     def latestOffset(self) -> dict:
         fs, root = _fs_and_root(self._path)
-        vs = _committed_versions(fs, root)
+        vs = committed_versions(fs, root)
         latest = vs[-1] if vs else self._start
         if self._max_versions is not None:
             latest = min(latest, self._committed + self._max_versions)
@@ -205,10 +150,8 @@ class _TableAppendsStreamReader(DataSourceStreamReader):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        fs, root = _fs_and_root(self._path)
-        pf = pq.ParquetFile(
-            _data_path(partition.file_uri, root), filesystem=fs
-        )
+        fs, data_path = _fs_and_root(partition.file_uri)
+        pf = pq.ParquetFile(data_path, filesystem=fs)
         n_cols = len(self._schema.fields)
         for batch in pf.iter_batches():
             tag = pa.array(
@@ -234,19 +177,17 @@ class TableAppendsDataSource(DataSource):
     def schema(self) -> StructType:
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        import pyarrow.dataset as pds
+        import pyarrow.parquet as pq
 
         fs, root = _fs_and_root(self.options["path"])
-        vs = _committed_versions(fs, root)
+        vs = committed_versions(fs, root)
         if not vs:
             raise ValueError(
                 f"no manifest table at {self.options['path']}"
             )
-        files = sorted(_manifest_file_set(fs, root, vs[-1]))
-        dset = pds.dataset(
-            [_data_path(files[0], root)], format="parquet", filesystem=fs
-        )
-        base = from_arrow_schema(dset.schema)
+        first = sorted(_manifest_file_set(fs, root, vs[-1]))[0]
+        data_fs, data_path = _fs_and_root(first)
+        base = from_arrow_schema(pq.read_schema(data_path, filesystem=data_fs))
         return StructType(
             list(base.fields)
             + [StructField(VERSION_COL, IntegerType(), True)]

@@ -12,6 +12,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from ml_pipelines_spark.operators import sidecars
 from ml_pipelines_spark.operators.manifest import (
     append_snapshot,
     compact_snapshot,
@@ -154,7 +155,7 @@ def test_failed_clone_backs_out_cleanly(spark, src, dst, monkeypatch):
         def boom(*a, **kw):
             raise RuntimeError("injected clone failure")
 
-        m.setattr(spark, "createDataFrame", boom)
+        m.setattr(sidecars, "write", boom)
         with pytest.raises(RuntimeError, match="injected"):
             shallow_clone(spark, src, dst)
     assert not os.path.exists(f"{dst}/_manifest")

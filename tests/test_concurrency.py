@@ -467,7 +467,7 @@ def test_failed_tombstone_commit_purges_sidecar(spark, table, monkeypatch):
         def boom(*a, **kw):
             raise RuntimeError("injected manifest failure")
 
-        m.setattr(spark, "createDataFrame", boom)
+        m.setattr(M.sidecars, "write", boom)
         with pytest.raises(RuntimeError, match="injected"):
             M.delete_from_snapshot(spark, table, "k", keys)
     assert glob.glob(f"{table}/_deletes/v=*") == []
@@ -486,7 +486,7 @@ def test_failed_dv_commit_purges_sidecar(spark, table, monkeypatch):
         def boom(*a, **kw):
             raise RuntimeError("injected manifest failure")
 
-        m.setattr(spark, "createDataFrame", boom)
+        m.setattr(M.sidecars, "write", boom)
         with pytest.raises(RuntimeError, match="injected"):
             delete_where(spark, table, "k < 50")
     assert glob.glob(f"{table}/_posdeletes/v=*") == []

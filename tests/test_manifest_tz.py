@@ -3,12 +3,12 @@ r11): pyarrow reads Spark's parquet timestamps as tz-naive UTC walls,
 while Spark's Python conversions (collect / createDataFrame / F.lit)
 speak tz-naive PROCESS-LOCAL walls. Un-normalized, the driver-side
 local-frame metadata path shifts tombstone keys and zone-map bounds by
-the tz offset relative to the distributed fallback — deletes silently
-miss rows and MoR victim pruning skips files. These tests run the
-timestamp-key lifecycle with the process tz forced to America/New_York
-(DST-observing, so the offset is not even constant) and assert the
-driver path and the distributed path agree with each other and with
-ground truth."""
+the tz offset relative to collected rows — deletes silently miss rows
+and MoR victim pruning skips files. These tests run the timestamp-key
+lifecycle with the process tz forced to America/New_York
+(DST-observing, so the offset is not even constant), on a bare and on
+a ``file://``-qualified table path, and assert both agree with ground
+truth."""
 
 from __future__ import annotations
 
@@ -84,11 +84,10 @@ def test_timestamp_keys_driver_path_non_utc(spark, new_york_tz):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_timestamp_keys_distributed_path_non_utc(spark, new_york_tz, monkeypatch):
-    monkeypatch.setattr(M, "_local_metadata_dir", lambda *a, **k: None)
-    d = tempfile.mkdtemp(prefix="mlps_tz_dist_")
+def test_timestamp_keys_file_uri_path_non_utc(spark, new_york_tz):
+    d = tempfile.mkdtemp(prefix="mlps_tz_uri_")
     try:
-        assert _lifecycle(spark, d) == _expected(spark)
+        assert _lifecycle(spark, f"file://{d}") == _expected(spark)
     finally:
         shutil.rmtree(d, ignore_errors=True)
 

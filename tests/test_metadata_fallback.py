@@ -1,9 +1,9 @@
-"""The driver-side metadata reads (round 11) leave the DISTRIBUTED
-read paths reachable only on remote filesystems or oversized sidecars
-— which no local test would ever hit again. These tests force the
-fallbacks (no local dir; tiny _LOCAL_RUNS_MAX) through a full table
-lifecycle and assert identical results, so the remote-deployment code
-path keeps real coverage."""
+"""Table metadata is read and written on the driver through
+``operators.sidecars``; only the data-sized delete sidecars keep a
+distributed read, above a size or row cap. These tests run a full
+table lifecycle on a bare path and on a ``file://``-qualified one
+(the URI form a remote deployment passes), force the capped fallbacks
+(tiny _LOCAL_RUNS_MAX, zero size cap), and assert identical results."""
 
 from __future__ import annotations
 
@@ -61,12 +61,12 @@ def _expected():
     return rows
 
 
-def test_lifecycle_distributed_metadata_path(spark, monkeypatch):
-    # force every sidecar read through the REMOTE (distributed) branch
-    monkeypatch.setattr(M, "_local_metadata_dir", lambda *a, **k: None)
-    d = tempfile.mkdtemp(prefix="mlps_fallback_")
+def test_lifecycle_file_uri_table_path(spark):
+    # the same lifecycle addressed by a scheme-qualified URI: metadata
+    # I/O resolves the filesystem from the qualified path
+    d = tempfile.mkdtemp(prefix="mlps_fileuri_")
     try:
-        got, vs, n = _lifecycle(spark, d)
+        got, vs, n = _lifecycle(spark, f"file://{d}")
         assert got == _expected()
         assert vs == [1, 2, 3, 4, 5, 6]
         assert n == len(got)
