@@ -374,7 +374,15 @@ def minhash_lsh_candidates(
     exact verification — the raw collision set, persisted. Exposed
     separately so recall/precision of the banding itself can be
     measured against exact ground truth (dedup_recall_eval); the plan
-    is stages 1-2 of ``minhash_lsh_pairs``'s docstring."""
+    is stages 1-2 of ``minhash_lsh_pairs``'s docstring.
+
+    The persist stays although nothing releases it: both verification
+    branches of ``minhash_lsh_pairs`` read the candidates, and without
+    it a cold ``dedup_by_components`` over the pairs ran 65 Spark jobs
+    instead of 53, and more CPU, on the benchmark's corpus path. The
+    session lets AQE coalesce the cached plan, so the persisted
+    distinct holds a few partitions, not ``spark.sql.shuffle.partitions``.
+    """
     rows_per_band = num_perm // bands
     sh = shingle_sets(df, id_col, text_col, shingle_k)
     # sizes + signature in one shuffle: min((a_i·h + b_i) mod p) per

@@ -148,6 +148,13 @@ def _normalize_arrow_timestamps(tbl, ts_mode: str = "local"):
     mixed with collected rows. ``ts_mode="aware"``: a metadata-only
     cast to tz-aware UTC — for frames re-entering Spark as pandas,
     where only aware values are unambiguous.
+
+    A TIMESTAMP_NTZ column is no instant: ``collect()`` yields its
+    walls as stored, so ``"local"`` leaves it as is. pyarrow tells the
+    two apart by type: an instant is tz-aware (driver-written, or
+    Spark's INT64 timestamps) or nanosecond naive (Spark's default
+    INT96), while TIMESTAMP_NTZ is naive at any other unit (Spark and
+    ``to_arrow_schema`` both write it as naive microseconds).
     """
     import datetime as _dt
 
@@ -168,6 +175,9 @@ def _normalize_arrow_timestamps(tbl, ts_mode: str = "local"):
     out = tbl
     for i, f in enumerate(tbl.schema):
         if not pa.types.is_timestamp(f.type):
+            continue
+        ntz = f.type.tz is None and f.type.unit != "ns"
+        if ntz and ts_mode == "local":
             continue
         # UTC walls, naive: an aware column drops its zone
         col = out.column(i).cast(pa.timestamp(f.type.unit))
@@ -630,6 +640,24 @@ def _write_manifest(
     _write_rows(spark, path, f"{manifest_dir}/v={version}", rows, zm.schema)
 
 
+def _band(df: DataFrame, sort_col: str, lo, hi) -> Column:
+    """The residual filter ``lo <= sort_col <= hi``, in the convention
+    the zone-map bounds are compared in (``collect()``'s). ``F.lit``
+    of a naive datetime is a process-local instant, which on a non-UTC
+    driver is not the wall a TIMESTAMP_NTZ column stores, so an NTZ
+    column gets NTZ literals of the same walls."""
+    from pyspark.sql.types import TimestampNTZType
+
+    ntz = isinstance(df.schema[sort_col].dataType, TimestampNTZType)
+
+    def lit(x):
+        if ntz:
+            return F.lit(x.isoformat(sep=" ")).cast("timestamp_ntz")
+        return F.lit(x)
+
+    return (F.col(sort_col) >= lit(lo)) & (F.col(sort_col) <= lit(hi))
+
+
 def read_pruned(
     spark: SparkSession,
     path: str,
@@ -658,7 +686,6 @@ def read_pruned(
         for r in manifest
         if not (r["max_v"] < lo or r["min_v"] > hi)
     ]
-    band = (F.col(sort_col) >= F.lit(lo)) & (F.col(sort_col) <= F.lit(hi))
     if not keep:
         # empty result with the snapshot's schema (lazy probe)
         out = spark.read.parquet(f"{path}/v={v}").filter(F.lit(False))
@@ -667,7 +694,7 @@ def read_pruned(
     runs = _pos_delete_runs(spark, path, v)
     if runs is not None or with_positions:
         out = _with_positions(out)
-    out = out.filter(band)
+    out = out.filter(_band(out, sort_col, lo, hi))
     dels = _delete_keys(
         spark, path, v, min_origin=min(_file_origin(f) for f in keep)
     )
@@ -1206,7 +1233,6 @@ def read_pruned_two_tier(
         for r in listing
         if not (r["shard_max"] < lo or r["shard_min"] > hi)
     ]
-    band = (F.col(sort_col) >= F.lit(lo)) & (F.col(sort_col) <= F.lit(hi))
     if not shard_files:
         return spark.read.parquet(f"{path}/v={v}").filter(F.lit(False))
     import pyarrow.dataset as pds
@@ -1228,7 +1254,8 @@ def read_pruned_two_tier(
     ]
     if not keep:
         return spark.read.parquet(f"{path}/v={v}").filter(F.lit(False))
-    out = spark.read.parquet(*keep).filter(band)
+    out = spark.read.parquet(*keep)
+    out = out.filter(_band(out, sort_col, lo, hi))
     dels = _delete_keys(
         spark, path, v, min_origin=min(_file_origin(f) for f in keep)
     )

@@ -3,7 +3,10 @@
 Scale posture: these configs are chosen so the same code runs on
 ``local[N]`` for tests and on a 1000-executor cluster against ~100 TB:
 
-- AQE on (runtime coalescing, skew-join splitting, join-strategy switch).
+- AQE on (runtime coalescing, skew-join splitting, join-strategy switch),
+  cached plans included: a ``cache()``/``persist()`` of a plan that ends
+  in a shuffle is sized to its data instead of keeping every
+  ``spark.sql.shuffle.partitions`` partition.
 - Arrow execution for all pandas UDF / toPandas boundaries.
 - UTC session timezone (matches the reference's ``timestamp[us, UTC]``
   schemas, TrainDatasets.py:85/146, and the DuckDB oracle's naive UTC).
@@ -20,7 +23,8 @@ import os
 from pyspark.sql import SparkSession
 
 # Defaults chosen for the local[32]/128GiB test box; every one of these is
-# overridable via environment or by passing extra_conf.
+# overridable by passing extra_conf (the driver memory also through
+# SPARK_GRAFT_DRIVER_MEM).
 _DEFAULT_CONF = {
     "spark.sql.session.timeZone": "UTC",
     # Parquet TIMESTAMP(NANOS) (e.g. pandas-written ns timestamps) is
@@ -30,9 +34,20 @@ _DEFAULT_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Unless this is set, Spark plans a cached query without AQE's
+    # final-stage shuffle optimizations, so a cached frame whose last
+    # operator is a shuffle (a window, distinct, join or aggregate)
+    # keeps all spark.sql.shuffle.partitions partitions and every stage
+    # that reads it runs that many tasks — 32 tasks per stage over ~1k
+    # cached rows on the curation path. Set, AQE coalesces the cached
+    # plan's final stage like any other.
+    # Trade-off: the cached frame loses its pinned hash partitioning, so
+    # a later join or aggregate on its key may need a shuffle that the
+    # cache would have saved.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # 64 MiB Arrow batches keep pandas-UDF overhead amortized without
-    # blowing executor memory on wide binary columns.
+    # 10,000-record Arrow batches keep pandas-UDF overhead amortized
+    # without blowing executor memory on wide binary columns.
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     # Dimension tables (region/nation/label maps) are tiny; 64 MiB leaves
     # headroom for the `part`-sized dims at sf0.1 while never broadcasting

@@ -12,6 +12,7 @@ truth."""
 
 from __future__ import annotations
 
+import datetime
 import os
 import shutil
 import tempfile
@@ -98,5 +99,67 @@ def test_timestamp_keys_both_paths_agree_utc(spark):
     d = tempfile.mkdtemp(prefix="mlps_tz_utc_")
     try:
         assert _lifecycle(spark, d) == _expected(spark)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+# TIMESTAMP_NTZ keys hold walls, not instants: collect() returns them as
+# stored whatever the process tz, so zone-map bounds and band literals
+# must not be shifted by the driver's offset.
+_NTZ_T0 = datetime.datetime(2024, 3, 8)
+
+
+def _ntz_table(spark):
+    return spark.range(0, 48).select(
+        (
+            F.to_timestamp_ntz(F.lit("2024-03-08 00:00:00"))
+            + F.make_interval(hours=F.col("id"))
+        ).alias("ts"),
+        F.col("id").alias("x"),
+    )
+
+
+def _ntz_merge(spark, d):
+    M.write_manifest_table(_ntz_table(spark), d, "ts", num_files=4)
+    updates = _ntz_table(spark).filter(F.col("x").isin(9, 10)).select(
+        "ts", F.lit(-1).cast("long").alias("x")
+    )
+    M.merge_snapshot(spark, d, "ts", updates)
+    got = [(r.ts, r.x) for r in M.read_snapshot(spark, d).collect()]
+    want = [
+        (_NTZ_T0 + datetime.timedelta(hours=h), -1 if h in (9, 10) else h)
+        for h in range(48)
+    ]
+    # one row per key: the files holding 09:00-10:00 were rewritten,
+    # not carried next to the new rows
+    assert sorted(got) == want
+
+
+def _ntz_band(spark, d):
+    M.write_manifest_table(_ntz_table(spark), d, "ts", num_files=4)
+    lo = _NTZ_T0 + datetime.timedelta(hours=20)
+    hi = _NTZ_T0 + datetime.timedelta(hours=26)
+    scan = M.read_snapshot(spark, d).collect()
+    want = sorted(r.ts for r in scan if lo <= r.ts <= hi)
+    got = sorted(r.ts for r in M.read_pruned(spark, d, "ts", lo, hi).collect())
+    assert len(want) == 7 and got == want
+    kept, total = M.pruned_file_count(spark, d, lo, hi)
+    assert kept < total
+
+
+@pytest.mark.parametrize("case", [_ntz_merge, _ntz_band])
+def test_ntz_keys_non_utc(spark, new_york_tz, case):
+    d = tempfile.mkdtemp(prefix="mlps_tz_ntz_")
+    try:
+        case(spark, d)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.mark.parametrize("case", [_ntz_merge, _ntz_band])
+def test_ntz_keys_utc(spark, case):
+    d = tempfile.mkdtemp(prefix="mlps_tz_ntz_utc_")
+    try:
+        case(spark, d)
     finally:
         shutil.rmtree(d, ignore_errors=True)
