@@ -6,21 +6,24 @@ other predicate reads the whole snapshot. Real tables prune more
 (Iceberg keeps per-file min/max for EVERY column; Delta adds bloom
 index files), and at 100 TB the difference is the table scan:
 
-- ``write_file_stats``: one distributed pass over a snapshot's files
-  computing per-file [min, max] for any numeric/timestamp columns
-  (``input_file_name()`` + groupBy, the manifest trick generalized),
-  stored LONG-FORM (file, col, min_d, max_d) under ``_filestats``.
-  Stats are keyed BY FILE, and files are immutable — so stats never go
-  stale, need no carrying through metadata-only appends / deletes /
-  ALTERs / restores, and a file inherited by fifty later snapshots pays
-  for its stats once.
-- ``read_pruned_stats``: band read on a SECONDARY column — open only
-  files whose recorded [min, max] overlaps, residual filter for
-  exactness, tombstones honored. Files with no stats row are
-  conservatively kept (stats only ever shrink the read). Pays off
-  when the layout clusters the column (Z-order, or natural correlation
-  like event_id ~ event time); the residual filter keeps it CORRECT
-  either way.
+- ``write_file_stats``: one distributed aggregate over a snapshot's
+  files computing per-file [min, max] for any numeric/timestamp
+  columns (``input_file_name()`` + groupBy, the manifest trick
+  generalized, timestamps as epoch seconds), appended on the driver
+  LONG-FORM (file, col, min_d, max_d) under ``_filestats``. Stats are
+  keyed BY FILE, and files are immutable — so stats never go stale,
+  need no carrying through metadata-only appends / deletes / ALTERs /
+  restores, and a file inherited by fifty later snapshots pays for its
+  stats once.
+- ``read_pruned_stats`` / ``read_pruned_rect``: band reads on
+  SECONDARY columns — open only files whose recorded [min, max]
+  overlaps every band, residual filter for exactness, tombstones
+  honored. Files with no stats row are conservatively kept (stats only
+  ever shrink the read). Pays off when the layout clusters the column
+  (Z-order, or natural correlation like event_id ~ event time); the
+  residual filter keeps it CORRECT either way. ``_filestats`` is
+  O(files x columns) metadata, read on the driver through
+  ``operators.sidecars`` — planning a band read runs no Spark job.
 - ``write_file_bloom`` / ``point_lookup``: per-file Bloom bitmaps for a
   point-lookup column the layout does NOT cluster. k double-hashed
   positions per key (Kirsch-Mitzenmacher, same xxhash64 family as
@@ -28,25 +31,122 @@ index files), and at 100 TB the difference is the table scan:
   a lookup probes the sidecar IN SPARK (array_contains on k positions),
   collects the surviving file list (O(files) driver rows — the same
   bound as manifest planning), and opens only those. No false
-  negatives; fpp ~ fill**k, stated per call. The 100 TB shape: a
+  negatives; fpp ~ fill**k, stated per call. ``_filebloom`` stays on
+  Spark: each row holds up to ``num_bits`` positions, so it grows with
+  the data, not with the file count. The 100 TB shape: a
   needle-in-haystack key opens the handful of files that contain it
   instead of scanning the table.
+
+Each reader shares its keep-set rule with its ``*_file_count`` twin,
+so the counted evidence is the plan the reader runs. An absent sidecar
+keeps every file; a present one that cannot be read raises.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import datetime
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import sidecars
 from .manifest import (
+    CommitConflict,
+    _abort_claim,
     _apply_tombstones,
+    _claim_version,
+    _commit_manifest,
     _delete_keys,
     _file_origin,
+    _latest_version,
     _manifest_rows,
-    _sidecar_exists,
+    _meta,
 )
 
 _BLOOM_SEED = 0x9E3779B9
+
+
+def _present(spark: SparkSession, path: str, name: str) -> bool:
+    """Whether sidecar ``name`` holds a visible file. An absent one
+    means "nothing indexed"; a present one that cannot be read raises
+    at its read (corruption must not degrade into a full-table read or
+    duplicate index rows)."""
+    fs, root = _meta(spark, path)
+    return bool(sidecars.list_files(fs, f"{root}/{name}"))
+
+
+def _stats_bounds(
+    spark: SparkSession, path: str, cols
+) -> dict[tuple[str, str], tuple]:
+    """{(file, col): (min_d, max_d)} of the ``_filestats`` rows for
+    ``cols``, read on the driver; empty when the sidecar is absent."""
+    if not _present(spark, path, "_filestats"):
+        return {}
+    fs, root = _meta(spark, path)
+    return {
+        (r["file"], r["col"]): (r["min_d"], r["max_d"])
+        for r in sidecars.read_table(fs, f"{root}/_filestats").to_pylist()
+        if r["col"] in cols
+    }
+
+
+def _num(bound) -> float:
+    """A band bound on the scale the stats are stored in (the column
+    cast to double). A datetime is the instant ``F.lit`` of it denotes
+    in the residual filter — naive ones in the process tz — as epoch
+    seconds, so pruning and filter agree on any driver tz."""
+    if isinstance(bound, datetime.datetime):
+        return bound.timestamp()
+    return float(bound)
+
+
+def _stats_plan(spark: SparkSession, path: str, bands, version):
+    """(snapshot files, files to open, version) for band predicates
+    ``bands`` = [(col, lo, hi), ...]: a file is opened unless its
+    recorded [min, max] for some band's column misses that band
+    (unknown stats keep the file — stats only ever shrink the read)."""
+    manifest, v = _manifest_rows(spark, path, version)
+    files = [r["file"] for r in manifest]
+    bounds = _stats_bounds(spark, path, {c for c, _, _ in bands})
+
+    def ok(f, col, lo, hi) -> bool:
+        b = bounds.get((f, col))
+        if b is None or b[0] is None:
+            return True
+        return not (b[1] < _num(lo) or b[0] > _num(hi))
+
+    return files, [f for f in files if all(ok(f, *b) for b in bands)], v
+
+
+def _read_kept(
+    spark: SparkSession, path: str, v: int, files, keep, cond: Column
+) -> DataFrame:
+    """Read the kept files of snapshot ``v`` with ``cond`` re-applied
+    as the residual filter, tombstones honored (the snapshot's schema
+    and no rows when nothing is kept)."""
+    if not files:
+        return spark.read.parquet(f"{path}/v={v}").filter(F.lit(False))
+    if not keep:
+        return spark.read.parquet(*files).filter(F.lit(False))
+    out = spark.read.parquet(*keep).filter(cond)
+    dels = _delete_keys(
+        spark, path, v, min_origin=min(_file_origin(f) for f in keep)
+    )
+    if dels is not None:
+        key = [c for c in dels.columns if c != "v"][0]
+        out = _apply_tombstones(out, dels, key)
+    return out
+
+
+def _in_bands(bands) -> Column:
+    return reduce(
+        lambda a, b: a & b,
+        [
+            (F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi))
+            for c, lo, hi in bands
+        ],
+    )
 
 
 def write_file_stats(
@@ -58,60 +158,59 @@ def write_file_stats(
     """Record per-file [min, max] for ``cols`` over one snapshot's
     files (default latest), skipping files that already have stats for
     all requested columns (file-keyed = immutable = write-once).
-    Returns the number of (file, col) stat rows written."""
+    Returns the number of (file, col) stat rows written. One Spark
+    aggregate over the files to index; the rows are appended to
+    ``_filestats`` on the driver."""
+    import pyarrow as pa
+
     manifest, _ = _manifest_rows(spark, path, version)
-    files = [r["file"] for r in manifest]
-    done: set[tuple[str, str]] = set()
-    # Existence-probe the sidecar instead of catching the read error:
-    # "no sidecar yet" is a filesystem fact, and a sidecar that EXISTS
-    # but fails to read is corruption that must surface, not silently
-    # degrade into duplicate stats rows (manifest._sidecar_exists).
-    if _sidecar_exists(spark, path, "_filestats"):
-        for r in (
-            spark.read.parquet(f"{path}/_filestats")
-            .select("file", "col")
-            .collect()
-        ):
-            done.add((r["file"], r["col"]))
+    done = _stats_bounds(spark, path, cols)
     todo = [
-        f for f in files if any((f, c) not in done for c in cols)
+        r["file"]
+        for r in manifest
+        if any((r["file"], c) not in done for c in cols)
     ]
     if not todo:
         return 0
-    df = spark.read.parquet(*todo).select(
-        F.input_file_name().alias("file"),
-        *[F.col(c).cast("double").alias(c) for c in cols],
+    wide = (
+        spark.read.parquet(*todo)
+        .select(
+            F.input_file_name().alias("file"),
+            *[F.col(c).cast("double").alias(c) for c in cols],
+        )
+        .groupBy("file")
+        .agg(
+            *[F.min(c).alias(f"__min_{c}") for c in cols],
+            *[F.max(c).alias(f"__max_{c}") for c in cols],
+        )
+        .collect()
     )
-    aggs = []
-    for c in cols:
-        aggs.append(F.min(c).alias(f"__min_{c}"))
-        aggs.append(F.max(c).alias(f"__max_{c}"))
-    wide = df.groupBy("file").agg(*aggs)
-    long = wide.select(
-        "file",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("col"),
-                        F.col(f"__min_{c}").alias("min_d"),
-                        F.col(f"__max_{c}").alias("max_d"),
-                    )
-                    for c in cols
-                ]
-            )
-        ).alias("s"),
-    ).select("file", "s.col", "s.min_d", "s.max_d")
     # drop (file, col) pairs already recorded (a later call with an
     # extended column list re-scans the file but must not duplicate)
-    if done:
-        existing = spark.createDataFrame(
-            list(done), "file string, col string"
+    rows = [
+        {
+            "file": r["file"],
+            "col": c,
+            "min_d": r[f"__min_{c}"],
+            "max_d": r[f"__max_{c}"],
+        }
+        for r in wide
+        for c in cols
+        if (r["file"], c) not in done
+    ]
+    if rows:
+        schema = pa.schema(
+            {
+                "file": pa.string(),
+                "col": pa.string(),
+                "min_d": pa.float64(),
+                "max_d": pa.float64(),
+            }
         )
-        long = long.join(existing, ["file", "col"], "left_anti")
-    n = long.count()
-    long.repartition(1).write.mode("append").parquet(f"{path}/_filestats")
-    return n
+        fs, root = _meta(spark, path)
+        tbl = pa.Table.from_pylist(rows, schema=schema)
+        sidecars.write(fs, f"{root}/_filestats", tbl, append=True)
+    return len(rows)
 
 
 def read_pruned_stats(
@@ -126,37 +225,9 @@ def read_pruned_stats(
     files whose recorded [min, max] for ``col`` overlaps [lo, hi]
     (unknown files kept), residual-filter for exactness, tombstones
     honored. Mirrors ``manifest.read_pruned`` for non-sort columns."""
-    manifest, v = _manifest_rows(spark, path, version)
-    files = [r["file"] for r in manifest]
-    if not files:
-        return spark.read.parquet(f"{path}/v={v}").filter(F.lit(False))
-    bounds: dict[str, tuple[float, float]] = {}
-    # Existence probe, not exception-as-control-flow: a corrupted
-    # sidecar raises instead of silently reading every file.
-    if _sidecar_exists(spark, path, "_filestats"):
-        for r in (
-            spark.read.parquet(f"{path}/_filestats")
-            .filter(F.col("col") == col)
-            .collect()
-        ):
-            bounds[r["file"]] = (r["min_d"], r["max_d"])
-    keep = [
-        f
-        for f in files
-        if f not in bounds
-        or not (bounds[f][1] < float(lo) or bounds[f][0] > float(hi))
-    ]
-    band = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-    if not keep:
-        return spark.read.parquet(*files).filter(F.lit(False))
-    out = spark.read.parquet(*keep).filter(band)
-    dels = _delete_keys(
-        spark, path, v, min_origin=min(_file_origin(f) for f in keep)
-    )
-    if dels is not None:
-        key = [c for c in dels.columns if c != "v"][0]
-        out = _apply_tombstones(out, dels, key)
-    return out
+    bands = [(col, lo, hi)]
+    files, keep, v = _stats_plan(spark, path, bands, version)
+    return _read_kept(spark, path, v, files, keep, _in_bands(bands))
 
 
 def pruned_stats_file_count(
@@ -169,22 +240,8 @@ def pruned_stats_file_count(
 ) -> tuple[int, int]:
     """(files kept, files total) for a secondary-column band — the
     skipping evidence."""
-    manifest, _ = _manifest_rows(spark, path, version)
-    files = [r["file"] for r in manifest]
-    bounds: dict[str, tuple[float, float]] = {}
-    for r in (
-        spark.read.parquet(f"{path}/_filestats")
-        .filter(F.col("col") == col)
-        .collect()
-    ):
-        bounds[r["file"]] = (r["min_d"], r["max_d"])
-    keep = sum(
-        1
-        for f in files
-        if f not in bounds
-        or not (bounds[f][1] < float(lo) or bounds[f][0] > float(hi))
-    )
-    return keep, len(files)
+    files, keep, _ = _stats_plan(spark, path, [(col, lo, hi)], version)
+    return len(keep), len(files)
 
 
 def _bloom_positions(col, num_bits: int, num_hashes: int) -> list:
@@ -200,6 +257,14 @@ def _bloom_positions(col, num_bits: int, num_hashes: int) -> list:
     h1 = F.pmod(F.xxhash64(c), m)
     h2 = F.pmod(F.xxhash64(F.lit(_BLOOM_SEED), c), m)
     return [F.pmod(h1 + F.lit(i) * h2, m) for i in range(num_hashes)]
+
+
+def _bloom_filter(col: str, num_bits: int, num_hashes: int) -> Column:
+    return (
+        (F.col("col") == col)
+        & (F.col("num_bits") == num_bits)
+        & (F.col("num_hashes") == num_hashes)
+    )
 
 
 def write_file_bloom(
@@ -218,22 +283,16 @@ def write_file_bloom(
     size the bits to the per-file key count (the compactor's
     target_rows), not the table. Returns files indexed."""
     manifest, _ = _manifest_rows(spark, path, version)
-    files = [r["file"] for r in manifest]
     done: set[str] = set()
-    # Existence probe, not exception-as-control-flow (see write_file_stats).
-    if _sidecar_exists(spark, path, "_filebloom"):
-        for r in (
-            spark.read.parquet(f"{path}/_filebloom")
-            .filter(
-                (F.col("col") == col)
-                & (F.col("num_bits") == num_bits)
-                & (F.col("num_hashes") == num_hashes)
-            )
+    if _present(spark, path, "_filebloom"):
+        done = {
+            r["file"]
+            for r in spark.read.parquet(f"{path}/_filebloom")
+            .filter(_bloom_filter(col, num_bits, num_hashes))
             .select("file")
             .collect()
-        ):
-            done.add(r["file"])
-    todo = [f for f in files if f not in done]
+        }
+    todo = [r["file"] for r in manifest if r["file"] not in done]
     if not todo:
         return 0
     df = spark.read.parquet(*todo).select(
@@ -260,6 +319,43 @@ def write_file_bloom(
     return len(todo)
 
 
+def _bloom_plan(
+    spark: SparkSession,
+    path: str,
+    col: str,
+    value,
+    version,
+    num_bits: int,
+    num_hashes: int,
+):
+    """(snapshot files, files to open, version) for a point lookup:
+    compute the probe's k positions (a 1-row Spark job, so build and
+    probe share xxhash64 bit-for-bit) and keep the files whose bitmap
+    holds ALL k; unindexed files — every file when ``_filebloom`` is
+    absent — are kept."""
+    manifest, v = _manifest_rows(spark, path, version)
+    files = [r["file"] for r in manifest]
+    if not files or not _present(spark, path, "_filebloom"):
+        return files, files, v
+    probe = (
+        spark.range(1)
+        .select(*_bloom_positions(F.lit(value), num_bits, num_hashes))
+        .collect()[0]
+    )
+    hit = reduce(
+        lambda a, b: a & b,
+        [F.array_contains("positions", int(p)) for p in probe],
+    )
+    rows = (
+        spark.read.parquet(f"{path}/_filebloom")
+        .filter(_bloom_filter(col, num_bits, num_hashes))
+        .select("file", hit.alias("hit"))
+        .collect()
+    )
+    missed = {r["file"] for r in rows} - {r["file"] for r in rows if r["hit"]}
+    return files, [f for f in files if f not in missed], v
+
+
 def point_lookup(
     spark: SparkSession,
     path: str,
@@ -269,62 +365,16 @@ def point_lookup(
     num_bits: int = 1 << 17,
     num_hashes: int = 3,
 ) -> DataFrame:
-    """Point lookup through the Bloom sidecar: compute the probe's k
-    positions (a 1-row Spark job, so build and probe share xxhash64
-    bit-for-bit), keep only the snapshot's files whose bitmap contains
-    ALL k (unindexed files conservatively kept), and read just those
-    with the equality re-applied as a residual filter — no false
-    negatives, tombstones honored."""
-    manifest, v = _manifest_rows(spark, path, version)
-    files = [r["file"] for r in manifest]
-    if not files:
-        return spark.read.parquet(f"{path}/v={v}").filter(F.lit(False))
-    probe = (
-        spark.range(1)
-        .select(
-            *[
-                p.alias(f"p{i}")
-                for i, p in enumerate(
-                    _bloom_positions(F.lit(value), num_bits, num_hashes)
-                )
-            ]
-        )
-        .collect()[0]
+    """Point lookup through the Bloom sidecar: open only the snapshot's
+    files whose bitmap contains all k probe positions (unindexed files
+    conservatively kept), with the equality re-applied as a residual
+    filter — no false negatives, tombstones honored."""
+    files, keep, v = _bloom_plan(
+        spark, path, col, value, version, num_bits, num_hashes
     )
-    positions = [int(probe[i]) for i in range(num_hashes)]
-    indexed: set[str] = set()
-    hit: set[str] = set()
-    # Existence probe, not exception-as-control-flow (see write_file_stats).
-    if _sidecar_exists(spark, path, "_filebloom"):
-        cond = F.lit(True)
-        for p in positions:
-            cond = cond & F.array_contains("positions", p)
-        rows = (
-            spark.read.parquet(f"{path}/_filebloom")
-            .filter(
-                (F.col("col") == col)
-                & (F.col("num_bits") == num_bits)
-                & (F.col("num_hashes") == num_hashes)
-            )
-            .select("file", cond.alias("hit"))
-            .collect()
-        )
-        for r in rows:
-            indexed.add(r["file"])
-            if r["hit"]:
-                hit.add(r["file"])
-    keep = [f for f in files if f not in indexed or f in hit]
-    eq = F.col(col) == F.lit(value)
-    if not keep:
-        return spark.read.parquet(*files).filter(F.lit(False))
-    out = spark.read.parquet(*keep).filter(eq)
-    dels = _delete_keys(
-        spark, path, v, min_origin=min(_file_origin(f) for f in keep)
+    return _read_kept(
+        spark, path, v, files, keep, F.col(col) == F.lit(value)
     )
-    if dels is not None:
-        key = [c for c in dels.columns if c != "v"][0]
-        out = _apply_tombstones(out, dels, key)
-    return out
 
 
 def point_lookup_file_count(
@@ -338,38 +388,10 @@ def point_lookup_file_count(
 ) -> tuple[int, int]:
     """(files opened, files total) for a point lookup — the evidence
     that the bloom actually skips."""
-    manifest, _ = _manifest_rows(spark, path, version)
-    files = [r["file"] for r in manifest]
-    probe = (
-        spark.range(1)
-        .select(
-            *[
-                p.alias(f"p{i}")
-                for i, p in enumerate(
-                    _bloom_positions(F.lit(value), num_bits, num_hashes)
-                )
-            ]
-        )
-        .collect()[0]
+    files, keep, _ = _bloom_plan(
+        spark, path, col, value, version, num_bits, num_hashes
     )
-    positions = [int(probe[i]) for i in range(num_hashes)]
-    cond = F.lit(True)
-    for p in positions:
-        cond = cond & F.array_contains("positions", p)
-    rows = (
-        spark.read.parquet(f"{path}/_filebloom")
-        .filter(
-            (F.col("col") == col)
-            & (F.col("num_bits") == num_bits)
-            & (F.col("num_hashes") == num_hashes)
-        )
-        .select("file", cond.alias("hit"))
-        .collect()
-    )
-    indexed = {r["file"] for r in rows}
-    hit = {r["file"] for r in rows if r["hit"]}
-    keep = sum(1 for f in files if f not in indexed or f in hit)
-    return keep, len(files)
+    return len(keep), len(files)
 
 
 def write_manifest_table_zordered(
@@ -397,13 +419,6 @@ def write_manifest_table_zordered(
     (tests/test_layout.py compares both curves' pruning head to head).
     Returns the new version."""
     from .layout import hilbert_key, zorder_key
-    from .manifest import (
-        CommitConflict,
-        _abort_claim,
-        _claim_version,
-        _commit_manifest,
-        _latest_version,
-    )
 
     spark = df.sparkSession
     # existence-probed bootstrap: a _manifest that EXISTS but fails to
@@ -442,15 +457,8 @@ def write_manifest_table_zordered(
         # rows are harmless: stats are consulted only for files the
         # live manifest lists.
         try:
-            from .manifest import _fs
-
-            fs, jvm = _fs(spark, path)
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{path}/_manifest/v={version}"
-                ),
-                True,
-            )
+            fs, root = _meta(spark, path)
+            fs.delete_dir(f"{root}/_manifest/v={version}")
         except Exception:
             pass
         _abort_claim(spark, path, version)
@@ -469,43 +477,6 @@ def read_pruned_rect(
     overlaps BOTH bands (the Z-order payoff — the keep set is the
     intersection of the two axes' keep sets), both bands re-applied as
     residual filters, tombstones honored."""
-    manifest, v = _manifest_rows(spark, path, version)
-    files = [r["file"] for r in manifest]
-    if not files:
-        return spark.read.parquet(f"{path}/v={v}").filter(F.lit(False))
-    bounds: dict[tuple[str, str], tuple[float, float]] = {}
-    # Existence probe, not exception-as-control-flow (see write_file_stats).
-    if _sidecar_exists(spark, path, "_filestats"):
-        for r in (
-            spark.read.parquet(f"{path}/_filestats")
-            .filter(F.col("col").isin([band_a[0], band_b[0]]))
-            .collect()
-        ):
-            bounds[(r["file"], r["col"])] = (r["min_d"], r["max_d"])
-
-    def _ok(f: str, col: str, lo: float, hi: float) -> bool:
-        b = bounds.get((f, col))
-        return b is None or not (b[1] < float(lo) or b[0] > float(hi))
-
-    keep = [
-        f
-        for f in files
-        if _ok(f, *band_a) and _ok(f, *band_b)
-    ]
-    ca, cb = F.col(band_a[0]), F.col(band_b[0])
-    rect = (
-        (ca >= F.lit(band_a[1]))
-        & (ca <= F.lit(band_a[2]))
-        & (cb >= F.lit(band_b[1]))
-        & (cb <= F.lit(band_b[2]))
-    )
-    if not keep:
-        return spark.read.parquet(*files).filter(F.lit(False))
-    out = spark.read.parquet(*keep).filter(rect)
-    dels = _delete_keys(
-        spark, path, v, min_origin=min(_file_origin(f) for f in keep)
-    )
-    if dels is not None:
-        key = [c for c in dels.columns if c != "v"][0]
-        out = _apply_tombstones(out, dels, key)
-    return out
+    bands = [band_a, band_b]
+    files, keep, v = _stats_plan(spark, path, bands, version)
+    return _read_kept(spark, path, v, files, keep, _in_bands(bands))

@@ -2037,22 +2037,31 @@ def expire_snapshots(
         if not keep_any and dv not in retained:
             fs.delete(st.getPath(), True)  # also clears _SUCCESS markers
     # sidecar GC: file-keyed stats/bloom rows (operators.filestats) for
-    # files no retained manifest references are dead — rewrite the
-    # (metadata-sized) sidecar keeping live rows, swap via rename
-    for sub in ("_filestats", "_filebloom"):
-        subroot = _p(f"{path}/{sub}")
-        if not fs.exists(subroot):
-            continue
+    # files no retained manifest references are dead. The metadata-
+    # sized _filestats keeps its live rows in one new driver-written
+    # file (readable even when empty), then drops the old files; the
+    # data-sized _filebloom is rewritten by Spark and swapped by rename
+    mfs, root = _meta(spark, path)
+    stats_dir = f"{root}/_filestats"
+    old = sidecars.list_files(mfs, stats_dir)
+    if old:
+        tbl = sidecars.read_table(mfs, stats_dir)
+        keep = [f in referenced_raw for f in tbl["file"].to_pylist()]
+        sidecars.write(mfs, stats_dir, tbl.filter(keep), append=True)
+        for info in old:
+            mfs.delete_file(info.path)
+    bloom_root = _p(f"{path}/_filebloom")
+    if fs.exists(bloom_root):
         ref_df = spark.createDataFrame(
             [(f,) for f in sorted(referenced_raw)], "file string"
         )
-        kept_rows = spark.read.parquet(f"{path}/{sub}").join(
+        kept_rows = spark.read.parquet(f"{path}/_filebloom").join(
             ref_df, "file", "left_semi"
         )
-        tmp = f"{path}/{sub}__gc_tmp"
+        tmp = f"{path}/_filebloom__gc_tmp"
         kept_rows.repartition(1).write.mode("overwrite").parquet(tmp)
-        fs.delete(subroot, True)
-        fs.rename(_p(tmp), subroot)
+        fs.delete(bloom_root, True)
+        fs.rename(_p(tmp), bloom_root)
     # deletion-vector GC: DV runs are file-keyed, so a run whose file
     # no retained manifest references is dead. DV paths come from
     # _metadata.file_path (file:/x) while manifests store
@@ -2064,7 +2073,8 @@ def expire_snapshots(
             [(f,) for f in sorted({_norm_uri(f) for f in referenced_raw})],
             "nfile string",
         )
-        kept_rows = (
+        tmp = f"{path}/_posdeletes__gc_tmp"
+        (
             spark.read.parquet(f"{path}/_posdeletes")
             .withColumn("_nfile", _norm_uri_col("file"))
             .join(
@@ -2073,18 +2083,18 @@ def expire_snapshots(
                 "left_semi",
             )
             .drop("_nfile")
+            .repartition(1)
+            .write.mode("overwrite")
+            .partitionBy("v")
+            .parquet(tmp)
         )
-        if kept_rows.limit(1).count() == 0:
+        fs.delete(pd_root, True)
+        if sidecars.list_files(mfs, f"{root}/_posdeletes__gc_tmp"):
+            fs.rename(_p(tmp), pd_root)
+        else:
             # nothing survives: drop the sidecar entirely (an empty
             # partitioned dir would be unreadable, not just empty)
-            fs.delete(pd_root, True)
-        else:
-            tmp = f"{path}/_posdeletes__gc_tmp"
-            kept_rows.repartition(1).write.mode("overwrite").partitionBy(
-                "v"
-            ).parquet(tmp)
-            fs.delete(pd_root, True)
-            fs.rename(_p(tmp), pd_root)
+            fs.delete(_p(tmp), True)
     # tombstone GC: version D is dead when every retained version either
     # predates it or contains only files written at/after it
     dels_root = _p(f"{path}/_deletes")

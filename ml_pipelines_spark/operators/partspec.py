@@ -22,6 +22,12 @@ that contract natively in Spark:
   filter restores exactness). Pruning is metadata-only — skipped files
   are never opened, not even their footers.
 
+The manifest (``_specmanifest/v=N``, one row per file per version) is
+table metadata: it is listed, read and written on the driver through
+``operators.sidecars``, never by a Spark job. Spark runs only the data
+work — the write, one per-file aggregate over the files just written,
+and a compaction's rewrite.
+
 Spec entries are identity columns or NATIVE transforms —
 ``bucket(N,col)`` / ``truncate(W,col)`` (Iceberg format spec,
 "Partition Transforms"): the writer materializes the transformed
@@ -44,10 +50,19 @@ faster"). Spec evolution is the operation that regret calls for.
 from __future__ import annotations
 
 import re
-from itertools import chain
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import sidecars
+from .manifest import (
+    CommitConflict,
+    _abort_claim,
+    _claim_version,
+    _latest_version,
+    _meta,
+    ledgered_batch_sink,
+)
 
 _MANIFEST = "_specmanifest"
 
@@ -122,14 +137,35 @@ def _parse_spec(spec_cols: list[str]) -> list[_SpecField]:
 
 
 def spec_versions(spark: SparkSession, path: str) -> list[int]:
-    """Table versions present at ``path``, ascending."""
-    vs = (
-        spark.read.parquet(f"{path}/{_MANIFEST}")
-        .select("v")
-        .distinct()
-        .collect()
+    """Table versions present at ``path``, ascending — from the
+    ``_specmanifest`` listing alone."""
+    return sidecars.committed_versions(*_meta(spark, path), _MANIFEST)
+
+
+def _write_manifest(
+    spark: SparkSession, path: str, version: int, rows: list[dict]
+) -> None:
+    """Write ``_specmanifest/v=<version>`` as one driver-side file in
+    the stored layout; a key a row lacks is null."""
+    import pyarrow as pa
+
+    schema = pa.schema(
+        {
+            "file": pa.string(),
+            "n_rows": pa.int64(),
+            "part": pa.map_(pa.string(), pa.string()),
+            "origin": pa.int32(),
+            "stat_col": pa.string(),
+            "stat_min": pa.float64(),
+            "stat_max": pa.float64(),
+        }
     )
-    return sorted(int(r["v"]) for r in vs)
+    fs, root = _meta(spark, path)
+    sidecars.write(
+        fs,
+        f"{root}/{_MANIFEST}/v={version}",
+        pa.Table.from_pylist(rows, schema=schema),
+    )
 
 
 def write_spec_snapshot(
@@ -149,27 +185,19 @@ def write_spec_snapshot(
     [min, max] (Iceberg column stats), so band predicates prune files
     INSIDE surviving tuples. Files written without stats (or with stats
     on another column) are conservatively kept by band reads.
+
+    Spark runs the data write and one per-file aggregate over the
+    written files (tuple, row count, stats and the null check); the
+    manifest is carried and written on the driver.
     """
     spark = df.sparkSession
     fields = _parse_spec(spec_cols)
     missing = [f.source for f in fields if f.source not in df.columns]
     if missing:
         raise KeyError(f"spec columns not in frame: {missing}")
-    null_hits = df.filter(
-        " OR ".join(f"{f.source} IS NULL" for f in fields)
-    ).limit(1).count()
-    if null_hits:
-        raise ValueError(f"null partition value in spec {spec_cols}")
     # same atomic commit point as the manifest table layer; existence-
     # probed bootstrap (a _specmanifest that EXISTS but fails to read
     # is corruption and must raise, not fork a parallel v=1 history)
-    from .manifest import (
-        CommitConflict,
-        _abort_claim,
-        _claim_version,
-        _latest_version,
-    )
-
     version = (_latest_version(spark, path, _MANIFEST) or 0) + 1
     if not _claim_version(spark, path, version):
         raise CommitConflict(
@@ -189,6 +217,9 @@ def write_spec_snapshot(
         out = out.withColumn(fld.shadow, expr).withColumn(
             fld.infile, expr
         )
+    # null sources, not _v_* values: bucket() hashes a null to a bucket
+    has_null = " OR ".join(f"`{f.source}` IS NULL" for f in fields)
+    stat = F.col(stats_col) if stats_col else F.lit(None)
     try:
         (
             out.repartition(*[F.col(pc) for pc in shadows])
@@ -196,63 +227,40 @@ def write_spec_snapshot(
             .partitionBy(*shadows)
             .parquet(data_dir)
         )
-        back = spark.read.parquet(data_dir)
-        stat_cols = [stats_col] if stats_col else []
-        new_rows = (
-            back.select(
-                F.input_file_name().alias("file"), *values, *stat_cols
+        per_file = (
+            spark.read.parquet(data_dir)
+            .select(
+                F.input_file_name().alias("file"),
+                F.expr(has_null or "false").alias("has_null"),
+                *values,
+                stat.cast("double").alias("stat"),
             )
             .groupBy("file")
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
-                *[
-                    F.first(F.col(vc)).alias(pc)
-                    for pc, vc in zip(shadows, values)
-                ],
-                *(
-                    [
-                        F.min(F.col(stats_col).cast("double")).alias(
-                            "stat_min"
-                        ),
-                        F.max(F.col(stats_col).cast("double")).alias(
-                            "stat_max"
-                        ),
-                    ]
-                    if stats_col
-                    else [
-                        F.lit(None).cast("double").alias("stat_min"),
-                        F.lit(None).cast("double").alias("stat_max"),
-                    ]
-                ),
+                F.max("has_null").alias("has_null"),
+                *[F.first(vc).alias(vc) for vc in values],
+                F.min("stat").alias("stat_min"),
+                F.max("stat").alias("stat_max"),
             )
-            .select(
-                "file",
-                "n_rows",
-                F.create_map(
-                    *chain.from_iterable(
-                        (F.lit(fld.key), F.col(fld.shadow))
-                        for fld in fields
-                    )
-                ).alias("part"),
-                F.lit(version).alias("origin"),
-                F.lit(stats_col).cast("string").alias("stat_col"),
-                "stat_min",
-                "stat_max",
-            )
+            .collect()
         )
+        # a null partition value would vanish into Hive's default-
+        # partition dir and stop matching any equality predicate
+        if any(r["has_null"] for r in per_file):
+            raise ValueError(f"null partition value in spec {spec_cols}")
+        new = [
+            {
+                **r.asDict(),
+                "part": {f.key: r[f.infile] for f in fields},
+                "origin": version,
+                "stat_col": stats_col,
+            }
+            for r in per_file
+        ]
         if version > 1:
-            carried = (
-                spark.read.parquet(f"{path}/{_MANIFEST}")
-                .filter(F.col("v") == version - 1)
-                .select(
-                    "file", "n_rows", "part", "origin",
-                    "stat_col", "stat_min", "stat_max",
-                )
-            )
-            new_rows = carried.unionByName(new_rows)
-        new_rows.repartition(1).write.mode("errorifexists").parquet(
-            f"{path}/{_MANIFEST}/v={version}"
-        )
+            new = _manifest_rows(spark, path, version - 1)[0] + new
+        _write_manifest(spark, path, version, new)
     except Exception:
         # failed post-claim commit: drop the partial data dir, release
         # the claim (manifest._abort_claim) so the spec table is not
@@ -263,12 +271,19 @@ def write_spec_snapshot(
 
 
 def _manifest_rows(spark: SparkSession, path: str, version: int | None):
-    rows = spark.read.parquet(f"{path}/{_MANIFEST}").collect()
-    vs = sorted({int(r["v"]) for r in rows})
-    v = version if version is not None else vs[-1]
+    """(rows, version) of one ``_specmanifest`` version — the latest
+    when ``version`` is None. Only that version's file is opened, so
+    planning cost does not grow with the table's history."""
+    fs, root = _meta(spark, path)
+    vs = sidecars.committed_versions(fs, root, _MANIFEST)
+    v = version if version is not None else max(vs, default=None)
     if v not in vs:
         raise ValueError(f"no version v={v} at {path}")
-    return [r for r in rows if int(r["v"]) == v], v
+    rows = sidecars.read_table(fs, f"{root}/{_MANIFEST}/v={v}").to_pylist()
+    for r in rows:
+        # pyarrow yields a map as a list of (key, value) pairs
+        r["part"] = dict(r["part"] or ())
+    return rows, v
 
 
 def _norm(v) -> str:
@@ -293,7 +308,7 @@ def _eq_targets(
     exactness)."""
     keys: set[str] = set()
     for r in manifest:
-        keys.update((r["part"] or {}).keys())
+        keys.update(r["part"])
     targets: dict[str, str] = {}
     for k in keys:
         m = _TRANSFORM_RE.match(k)
@@ -306,7 +321,7 @@ def _eq_targets(
 
 
 def _keep(row, targets: dict[str, str]) -> bool:
-    part = row["part"] or {}
+    part = row["part"]
     return all(part[k] == v for k, v in targets.items() if k in part)
 
 
@@ -320,6 +335,27 @@ def _keep_band(row, band) -> bool:
     if row["stat_col"] != col or row["stat_min"] is None:
         return True
     return not (row["stat_max"] < lo or row["stat_min"] > hi)
+
+
+def _drop_shadows(df: DataFrame) -> DataFrame:
+    """``df`` without the spec's shadow columns: the ``_v_*`` twins in
+    the files and the ``_p_*`` dirs an explicit-file-list read may
+    still infer as partition columns (the real columns are in the
+    files)."""
+    return df.drop(*[c for c in df.columns if c.startswith(("_p_", "_v_"))])
+
+
+def _spec_plan(spark: SparkSession, path: str, eq: dict, version, band):
+    """(snapshot files, files kept, version): the one keep rule of
+    ``read_spec_pruned`` and ``spec_pruned_file_count``."""
+    manifest, v = _manifest_rows(spark, path, version)
+    targets = _eq_targets(spark, manifest, eq)
+    keep = [
+        r["file"]
+        for r in manifest
+        if _keep(r, targets) and _keep_band(r, band)
+    ]
+    return [r["file"] for r in manifest], keep, v
 
 
 def read_spec_pruned(
@@ -337,34 +373,15 @@ def read_spec_pruned(
     column miss the band (both prunings are metadata-only; residual
     filters restore exactness). ``version=None`` reads the latest;
     earlier versions time-travel."""
-    manifest, v = _manifest_rows(spark, path, version)
-    targets = _eq_targets(spark, manifest, eq)
-    keep = [
-        r["file"]
-        for r in manifest
-        if _keep(r, targets) and _keep_band(r, band)
-    ]
-    if not keep:
-        all_files = [r["file"] for r in manifest]
-        if all_files:
-            # schema from a real data file (a directory probe would
-            # infer spurious partition columns like compaction's g=)
-            out = spark.read.parquet(all_files[0]).filter(F.lit(False))
-        else:
-            out = spark.read.parquet(f"{path}/v={v}").filter(
-                F.lit(False)
-            )
-    else:
+    files, keep, v = _spec_plan(spark, path, eq, version, band)
+    if keep:
         out = spark.read.parquet(*keep)
-    # explicit-file-list reads may still infer the shadow dirs as
-    # partition columns; the real columns live inside the files
-    out = out.drop(
-        *[
-            c
-            for c in out.columns
-            if c.startswith("_p_") or c.startswith("_v_")
-        ]
-    )
+    else:
+        # schema from a real data file (a directory probe would infer
+        # spurious partition columns like compaction's g=)
+        empty = files[0] if files else f"{path}/v={v}"
+        out = spark.read.parquet(empty).filter(F.lit(False))
+    out = _drop_shadows(out)
     for c, val in eq.items():
         out = out.filter(F.col(c) == F.lit(val))
     if band is not None:
@@ -385,12 +402,8 @@ def spec_pruned_file_count(
     """(files kept, files total) for the predicate — the evidence that
     pruning works per-spec (and per-band), checked physically in
     tests."""
-    manifest, _ = _manifest_rows(spark, path, version)
-    targets = _eq_targets(spark, manifest, eq)
-    kept = sum(
-        1 for r in manifest if _keep(r, targets) and _keep_band(r, band)
-    )
-    return kept, len(manifest)
+    files, keep, _ = _spec_plan(spark, path, eq, version, band)
+    return len(keep), len(files)
 
 
 def compact_spec_snapshot(spark: SparkSession, path: str) -> int:
@@ -405,8 +418,6 @@ def compact_spec_snapshot(spark: SparkSession, path: str) -> int:
     new files). Returns the new version."""
     manifest, prev = _manifest_rows(spark, path, None)
     version = prev + 1
-    from .manifest import CommitConflict, _abort_claim, _claim_version
-
     if not _claim_version(spark, path, version):
         raise CommitConflict(
             f"spec compaction at {path} lost the claim for v={version}"
@@ -415,52 +426,41 @@ def compact_spec_snapshot(spark: SparkSession, path: str) -> int:
     # group files by identical tuple; one output file per group
     groups: dict[tuple, list] = {}
     for r in manifest:
-        key = tuple(sorted((r["part"] or {}).items()))
+        key = tuple(sorted(r["part"].items()))
         groups.setdefault(key, []).append(r["file"])
+    keys = sorted(groups)
     try:
-        rows = []
-        for gi, (key, files) in enumerate(sorted(groups.items())):
-            part_dir = f"{data_dir}/g={gi}"
-            df = spark.read.parquet(*files)
-            df = df.drop(
-                *[
-                    c
-                    for c in df.columns
-                    if c.startswith("_p_") or c.startswith("_v_")
-                ]
+        for gi, key in enumerate(keys):
+            df = _drop_shadows(spark.read.parquet(*groups[key]))
+            df.repartition(1).write.mode("errorifexists").parquet(
+                f"{data_dir}/g={gi}"
             )
-            df.repartition(1).write.mode("errorifexists").parquet(part_dir)
-            # per-file row counts from the written files themselves (the
-            # group total would be wrong if coalesce ever emits >1 part,
-            # and a driver-side df.count() re-scans the group's inputs)
-            back = spark.read.parquet(part_dir)
-            per_file = (
-                back.select(F.input_file_name().alias("file"))
-                .groupBy("file")
-                .count()
-                .collect()
-            )
-            for r2 in per_file:
-                rows.append(
-                    (r2["file"], int(r2["count"]), dict(key), version)
-                )
-        new_manifest = spark.createDataFrame(
-            rows,
-            "file string, n_rows bigint, part map<string,string>,"
-            " origin int",
-        ).select(
-            "file", "n_rows", "part", "origin",
-            # compaction merges files whose stats may differ; recomputing
-            # them needs a stats_col the caller no longer passes — the
-            # rewritten files carry NO stats and band reads keep them
-            # conservatively (correct, just unpruned until the next
-            # stats-bearing write)
-            F.lit(None).cast("string").alias("stat_col"),
-            F.lit(None).cast("double").alias("stat_min"),
-            F.lit(None).cast("double").alias("stat_max"),
+        # per-file row counts from the written files themselves, in one
+        # aggregate over the new version (g= names each file's group)
+        per_file = (
+            spark.read.parquet(data_dir)
+            .groupBy(F.input_file_name().alias("file"), "g")
+            .count()
+            .collect()
         )
-        new_manifest.repartition(1).write.mode("errorifexists").parquet(
-            f"{path}/{_MANIFEST}/v={version}"
+        # compaction merges files whose stats may differ; recomputing
+        # them needs a stats_col the caller no longer passes — the
+        # rewritten files carry NO stats and band reads keep them
+        # conservatively (correct, just unpruned until the next
+        # stats-bearing write)
+        _write_manifest(
+            spark,
+            path,
+            version,
+            [
+                {
+                    "file": r["file"],
+                    "n_rows": r["count"],
+                    "part": dict(keys[r["g"]]),
+                    "origin": version,
+                }
+                for r in per_file
+            ],
         )
     except Exception:
         _abort_claim(spark, path, version)
@@ -482,8 +482,6 @@ def stream_spec_append_sink(
     Batches replayed after a failure are idempotent via the ledger (a
     batch id that already produced a version is skipped). Returns the
     StreamingQuery; callers stop it."""
-    from .manifest import ledgered_batch_sink
-
     return ledgered_batch_sink(
         stream_df,
         checkpoint_dir,

@@ -3,13 +3,22 @@
 
 A table's metadata tier (``_manifest/v=N``, ``_refs/seq=K``,
 ``_restores``, ``_schema_events``, the manifest list and shards, staged
-and branch manifests) is a handful of few-row parquet files. Every
-table format reads and writes that tier on the driver (Delta's log,
-Iceberg's manifests); a distributed job per few-row file is pure
-scheduler latency. This module is the one I/O path for it, shared by
-the driver (``operators.manifest``, ``operators.posdeletes``) and by
-the streaming source's planning worker
-(``sources.table_appends_datasource``), which has no session at all.
+and branch manifests, the partition-spec manifest ``_specmanifest/v=N``
+and the per-file column stats ``_filestats``) is a handful of parquet
+files of O(files x columns) rows. Every table format reads and writes
+that tier on the driver (Delta's log, Iceberg's manifests); a
+distributed job per few-row file is pure scheduler latency. This module
+is the one I/O path for it, shared by the driver
+(``operators.manifest``, ``operators.posdeletes``,
+``operators.partspec``, ``operators.filestats``) and by the streaming
+source's planning worker (``sources.table_appends_datasource``), which
+has no session at all.
+
+Three sidecars grow with the data rather than with the file count, so
+Spark reads and writes them: the key tombstones ``_deletes`` and the
+deletion-vector runs ``_posdeletes`` (one row per deleted key or run),
+and the Bloom index ``_filebloom`` (up to ``num_bits`` positions per
+file).
 
 Layout conventions match what Spark reads and writes: hive ``k=v``
 directories are partition columns, and names starting with ``_`` or

@@ -192,3 +192,45 @@ def test_corrupt_sidecar_raises_loudly(spark):
             write_file_bloom(spark, d, "grp")
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_stats_file_count_on_unindexed_table(spark):
+    """No ``_filestats`` yet: the counter keeps every file, like
+    ``read_pruned_stats`` on the same table."""
+    d = tempfile.mkdtemp(prefix="mlps_filestats_none_")
+    try:
+        _table(spark, d)
+        assert pruned_stats_file_count(spark, d, "ts2", 200, 300) == (8, 8)
+        assert read_pruned_stats(spark, d, "ts2", 200, 300).count() == 50
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_point_lookup_file_count_on_unindexed_table(spark):
+    """No ``_filebloom`` yet: the counter keeps every file, like
+    ``point_lookup`` on the same table."""
+    d = tempfile.mkdtemp(prefix="mlps_filebloom_none_")
+    try:
+        _table(spark, d)
+        assert point_lookup_file_count(spark, d, "grp", 3) == (8, 8)
+        assert point_lookup(spark, d, "grp", 3).count() == 125
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_all_null_file_stats_keep_the_file(spark):
+    """A file whose column is all null records null bounds; band reads
+    treat them as unknown (kept, the residual filter drops the rows)."""
+    d = tempfile.mkdtemp(prefix="mlps_filestats_nulls_")
+    try:
+        df = spark.range(0, 1000).select(
+            F.col("id").alias("k"),
+            F.when(F.col("id") >= 500, F.col("id")).alias("m"),
+        )
+        write_manifest_table(df, d, "k", num_files=8)
+        assert write_file_stats(spark, d, ["m"]) == 8
+        kept, total = pruned_stats_file_count(spark, d, "m", 0, 10**6)
+        assert kept == total == 8
+        assert read_pruned_stats(spark, d, "m", 0, 10**6).count() == 500
+    finally:
+        shutil.rmtree(d, ignore_errors=True)

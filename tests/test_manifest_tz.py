@@ -163,3 +163,40 @@ def test_ntz_keys_utc(spark, case):
         case(spark, d)
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+# Secondary stats (operators.filestats) store a TIMESTAMP column's
+# bounds as epoch seconds; a band given in collect() walls must prune
+# as the instants its residual filter compares, on any driver tz.
+def _stats_ts_band(spark, d):
+    from ml_pipelines_spark.operators import filestats as FS
+
+    M.write_manifest_table(_ts_table(spark), d, "x", num_files=8)
+    FS.write_file_stats(spark, d, ["ts", "x"])
+    walls = {r.x: r.ts for r in _ts_table(spark).collect()}
+    # the band opens 1-3 h after the second file's first row: bounds
+    # read as UTC walls would shift it by the offset into the first file
+    b = sorted(r["min_v"] for r in M._manifest_rows(spark, d, None)[0])[1]
+    lo, hi = walls[b + 1], walls[b + 3]
+    want = [b + 1, b + 2, b + 3]
+    got = FS.read_pruned_stats(spark, d, "ts", lo, hi).collect()
+    assert sorted(r.x for r in got) == want
+    assert FS.pruned_stats_file_count(spark, d, "ts", lo, hi) == (1, 8)
+    rect = FS.read_pruned_rect(spark, d, ("ts", lo, hi), ("x", 0, 10**6))
+    assert sorted(r.x for r in rect.collect()) == want
+
+
+def test_stats_timestamp_band_non_utc(spark, new_york_tz):
+    d = tempfile.mkdtemp(prefix="mlps_tz_stats_")
+    try:
+        _stats_ts_band(spark, d)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_stats_timestamp_band_utc(spark):
+    d = tempfile.mkdtemp(prefix="mlps_tz_stats_utc_")
+    try:
+        _stats_ts_band(spark, d)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)

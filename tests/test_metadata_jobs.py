@@ -1,6 +1,8 @@
 """Metadata commits are driver-side file operations: a tag, an ALTER,
 a RESTORE and the manifest list run no Spark job, and a tombstone
-delete runs only the jobs of its tombstone write. Job counts are
+delete runs only the jobs of its tombstone write. The secondary-stats
+and partition-spec sidecars follow the same rule: their file counters
+run no job, and their writers run only their data work. Job counts are
 deterministic, unlike timings, so they pin the property exactly."""
 
 from __future__ import annotations
@@ -10,7 +12,9 @@ import itertools
 import pytest
 from pyspark.sql import functions as F
 
+import ml_pipelines_spark.operators.filestats as FS
 import ml_pipelines_spark.operators.manifest as M
+import ml_pipelines_spark.operators.partspec as PS
 
 _groups = itertools.count()
 
@@ -84,3 +88,109 @@ def test_delete_runs_only_its_tombstone_write(spark, table, tmp_path):
         tombstones
     )
     assert M.snapshot_row_count(spark, table) == 240
+
+
+def _stats_aggregate(spark, path, cols):
+    """write_file_stats's per-file aggregate over the snapshot, alone."""
+    files = [r["file"] for r in M._manifest_rows(spark, path, None)[0]]
+    spark.read.parquet(*files).select(
+        F.input_file_name().alias("file"),
+        *[F.col(c).cast("double").alias(c) for c in cols],
+    ).groupBy("file").agg(
+        *[F.min(c) for c in cols], *[F.max(c) for c in cols]
+    ).collect()
+
+
+def test_file_stats_write_runs_only_its_aggregate(spark, table):
+    for cols in (["val"], ["val", "k"]):
+        alone = _jobs(spark, _stats_aggregate, spark, table, cols)
+        assert alone > 0
+        assert _jobs(spark, FS.write_file_stats, spark, table, cols) == alone
+    assert FS.write_file_stats(spark, table, ["val", "k"]) == 0
+
+
+def _spec_frame(spark):
+    return spark.range(0, 300).select(
+        F.col("id").alias("k"), (F.col("id") % 3).cast("string").alias("s")
+    )
+
+
+def test_spec_write_runs_only_its_write_and_aggregate(spark, tmp_path):
+    df = _spec_frame(spark)
+
+    def alone(d):
+        # the data write and per-file aggregate, same shape as
+        # write_spec_snapshot's
+        df.withColumn("_p_s", F.col("s")).withColumn(
+            "_v_s", F.col("s")
+        ).repartition("_p_s").write.partitionBy("_p_s").parquet(d)
+        spark.read.parquet(d).select(
+            F.input_file_name().alias("file"), "_v_s", "k"
+        ).groupBy("file").agg(
+            F.count(F.lit(1)), F.first("_v_s"), F.min("k"), F.max("k")
+        ).collect()
+
+    n = _jobs(spark, alone, str(tmp_path / "alone"))
+    assert n > 0
+    spec = str(tmp_path / "spec")
+    # v=1, then v=2 carrying v=1's rows on the driver
+    assert _jobs(spark, PS.write_spec_snapshot, df, spec, ["s"], "k") == n
+    assert _jobs(spark, PS.write_spec_snapshot, df, spec, ["s"]) == n
+    assert PS.spec_versions(spark, spec) == [1, 2]
+
+
+def test_file_counters_run_no_spark_job(spark, table, tmp_path):
+    spec = str(tmp_path / "spec")
+    PS.write_spec_snapshot(_spec_frame(spark), spec, ["s"])
+    PS.write_spec_snapshot(_spec_frame(spark), spec, ["s"], "k")
+    band = (spark, table, "val", 0, 99)
+    calls = [
+        ("spec_versions", PS.spec_versions, (spark, spec)),
+        (
+            "spec_pruned_file_count",
+            PS.spec_pruned_file_count,
+            (spark, spec, {"s": "1"}, None, ("k", 400, 500)),
+        ),
+        (
+            "pruned_stats_file_count (unindexed)",
+            FS.pruned_stats_file_count,
+            band,
+        ),
+        (
+            "point_lookup_file_count (unindexed)",
+            FS.point_lookup_file_count,
+            (spark, table, "val", 42),
+        ),
+    ]
+    counts = {name: _jobs(spark, fn, *args) for name, fn, args in calls}
+    FS.write_file_stats(spark, table, ["val"])
+    counts["pruned_stats_file_count"] = _jobs(
+        spark, FS.pruned_stats_file_count, *band
+    )
+    assert counts == dict.fromkeys(counts, 0)
+    # v=1's s=1 file has no stats and is kept; v=2's is outside the band
+    assert PS.spec_pruned_file_count(
+        spark, spec, {"s": "1"}, band=("k", 400, 500)
+    ) == (1, 6)
+    kept, total = FS.pruned_stats_file_count(*band)
+    assert kept < total == 6
+
+
+def test_expire_filestats_gc_runs_no_job(spark, tmp_path):
+    def expire_jobs(name, stats):
+        d = str(tmp_path / name)
+        rows = spark.range(0, 200).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("val")
+        )
+        M.write_manifest_table(rows, d, "k", num_files=4)
+        if stats:
+            FS.write_file_stats(spark, d, ["val"])
+        M.compact_snapshot(spark, d, "k", target_rows=100)
+        return d, _jobs(spark, M.expire_snapshots, spark, d, keep_last=1)
+
+    _, base = expire_jobs("plain", False)
+    indexed, with_stats = expire_jobs("indexed", True)
+    assert with_stats <= base
+    # every stats row named a compacted-away file: none survive
+    assert spark.read.parquet(f"{indexed}/_filestats").count() == 0
+    assert M.snapshot_row_count(spark, indexed) == 200

@@ -489,3 +489,24 @@ def test_zero_match_delete_where_commits(spark):
         assert read_snapshot(spark, d).count() == 50
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_expire_keeps_surviving_dv_runs(spark, table):
+    """The DV GC's other outcome: runs on files a retained snapshot
+    still references survive the expire and keep deleting rows, while
+    the runs of a rewritten file go with it."""
+    delete_where(spark, table, "k >= 100 AND k < 600")
+    before = spark.read.parquet(f"{table}/_posdeletes").count()
+    # copy-on-write rewrite of the first file only
+    updates = spark.range(0, 10).select(
+        F.col("id").alias("k"),
+        F.lit(7).alias("val"),
+        F.lit(7).alias("bucket"),
+    )
+    merge_snapshot(spark, table, "k", updates)
+    expire_snapshots(spark, table, keep_last=1)
+    after = spark.read.parquet(f"{table}/_posdeletes").count()
+    assert 0 < after < before
+    got = read_snapshot(spark, table)
+    assert got.count() == 500
+    assert got.filter((F.col("k") >= 100) & (F.col("k") < 600)).count() == 0
