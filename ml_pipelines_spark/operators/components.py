@@ -22,12 +22,70 @@ rounds 1..N-1.
 
 Determinism: labels are min node ids — no RNG, no partition
 sensitivity; retries converge to the same fixpoint.
+
+Small inputs close on the driver. ``connected_components`` collects its
+checkpointed edge list through ``gate.collect_capped``; at most
+``DRIVER_MAX_EDGES`` edges with integer or string ids (the types whose
+Python order is Spark's) run union-find in plain Python, with the
+same answer (minimum node id per component, null ids linking nothing)
+as a local frame of the same schema. Only above the cap does the
+propagation loop run, and the checkpoint means it never recomputes the
+pair generation. A 60-edge random graph thus costs 2 jobs instead of
+81 at ``local[4]``; the other graph kernels below have no driver path.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+
+from ..gate import collect_capped, orders_like_spark
+
+# Edges closed on the driver. At the cap the collected Arrow columns take
+# 16 MB (two int64 ids) and the union-find dict of up to 2M nodes about
+# 0.3 GB of driver heap; above it the distributed loop runs. Measured at
+# local[4] on sparse random graphs (n edges over 2n ids): the driver path
+# took 2.5 s at 100k edges, where the loop had not finished in 300 s,
+# and 14 s at the cap, where the loop failed building a broadcast.
+DRIVER_MAX_EDGES = 1_000_000
+
+
+def _union_find(src: list, dst: list) -> tuple[list, list]:
+    """(nodes, components) of the graph with edges ``zip(src, dst)``:
+    each component is labelled by its minimum node id. As in the join
+    loop, where null never matches a key, an edge with a null end links
+    nothing and a null node, if any, comes back once with a null
+    component."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    has_null = False
+    for a, b in zip(src, dst):
+        for v in (a, b):
+            if v is None:
+                has_null = True
+            else:
+                parent.setdefault(v, v)
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            # every root is its set's minimum, so the smaller one stays
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    nodes = list(parent)
+    comps = [find(v) for v in nodes]
+    if has_null:
+        nodes.append(None)
+        comps.append(None)
+    return nodes, comps
 
 
 def connected_components(
@@ -48,6 +106,10 @@ def connected_components(
     Raises if the fixpoint isn't reached in ``max_iter`` rounds — with
     shortcutting that would mean a component of diameter beyond ~2^25,
     i.e. a pathological input, not a big one.
+
+    Up to ``DRIVER_MAX_EDGES`` edges with integer or string ids are
+    closed by union-find on the driver instead (module docstring); the
+    rows are the same on both paths.
     """
     # Materialize the base pair list BEFORE symmetrizing: each union
     # branch otherwise re-evaluates the whole upstream pair-generation
@@ -58,6 +120,22 @@ def connected_components(
     sym = base.unionByName(
         base.select(F.col("d").alias("s"), F.col("s").alias("d"))
     )
+    id_type = sym.schema["s"].dataType
+    local = (
+        collect_capped(base, DRIVER_MAX_EDGES)
+        if orders_like_spark(id_type)
+        else None
+    )
+    if local is not None:
+        nodes, comps = _union_find(
+            local.column("s").to_pylist(), local.column("d").to_pylist()
+        )
+        at = to_arrow_type(id_type)
+        return edges.sparkSession.createDataFrame(
+            pa.table(
+                {"node": pa.array(nodes, at), "component": pa.array(comps, at)}
+            )
+        )
     sym = sym.distinct().localCheckpoint(eager=True)
 
     labels = (

@@ -377,11 +377,13 @@ def minhash_lsh_candidates(
     is stages 1-2 of ``minhash_lsh_pairs``'s docstring.
 
     The persist stays although nothing releases it: both verification
-    branches of ``minhash_lsh_pairs`` read the candidates, and without
-    it a cold ``dedup_by_components`` over the pairs ran 65 Spark jobs
-    instead of 53, and more CPU, on the benchmark's corpus path. The
-    session lets AQE coalesce the cached plan, so the persisted
-    distinct holds a few partitions, not ``spark.sql.shuffle.partitions``.
+    branches of ``minhash_lsh_pairs`` read the candidates. On the
+    benchmark's corpus path (cold iteration, seed 1, ``local[4]``, two
+    runs each) a ``dedup_by_components`` over the pairs ran 19 Spark
+    jobs without it instead of 16, and the iteration took 78.0 and 80.6
+    CPU s instead of 64.0 and 64.2. The session lets AQE coalesce the
+    cached plan, so the persisted distinct holds a few partitions, not
+    ``spark.sql.shuffle.partitions``.
     """
     rows_per_band = num_perm // bands
     sh = shingle_sets(df, id_col, text_col, shingle_k)

@@ -55,6 +55,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import sidecars
+from .filestats import _num
 from .manifest import (
     CommitConflict,
     _abort_claim,
@@ -328,13 +329,14 @@ def _keep(row, targets: dict[str, str]) -> bool:
 def _keep_band(row, band) -> bool:
     """File-stats overlap check: keep unless this file carries stats
     for the band's column that prove disjointness (unknown stats or a
-    different stats column keep the file — conservative)."""
+    different stats column keep the file — conservative). The bounds
+    compare on the stored double scale (``filestats._num``)."""
     if band is None:
         return True
     col, lo, hi = band
     if row["stat_col"] != col or row["stat_min"] is None:
         return True
-    return not (row["stat_max"] < lo or row["stat_min"] > hi)
+    return not (row["stat_max"] < _num(lo) or row["stat_min"] > _num(hi))
 
 
 def _drop_shadows(df: DataFrame) -> DataFrame:

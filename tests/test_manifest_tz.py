@@ -200,3 +200,40 @@ def test_stats_timestamp_band_utc(spark):
         _stats_ts_band(spark, d)
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+# Partition-spec stats (operators.partspec) store a TIMESTAMP stats
+# column as epoch seconds too; a datetime band must prune the same way.
+def _spec_ts_band(spark, d):
+    from ml_pipelines_spark.operators import partspec as PS
+
+    rows = _ts_table(spark).filter(F.col("x") < 48).withColumn(
+        "g", F.floor(F.col("x") / 12)
+    )
+    PS.write_spec_snapshot(rows, d, ["g"], stats_col="ts")
+    walls = {r.x: r.ts for r in rows.collect()}
+    # the band opens 1-3 h after the second tuple's first row: bounds
+    # read as UTC walls would shift it by the offset into the first file
+    lo, hi = walls[13], walls[15]
+    got = PS.read_spec_pruned(spark, d, {}, band=("ts", lo, hi)).collect()
+    assert sorted(r.x for r in got) == [13, 14, 15]
+    assert PS.spec_pruned_file_count(spark, d, {}, band=("ts", lo, hi)) == (
+        1,
+        4,
+    )
+
+
+def test_spec_timestamp_band_non_utc(spark, new_york_tz):
+    d = tempfile.mkdtemp(prefix="mlps_tz_spec_")
+    try:
+        _spec_ts_band(spark, d)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_spec_timestamp_band_utc(spark):
+    d = tempfile.mkdtemp(prefix="mlps_tz_spec_utc_")
+    try:
+        _spec_ts_band(spark, d)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)

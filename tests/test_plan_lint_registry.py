@@ -48,8 +48,20 @@ from __future__ import annotations
 
 import pytest
 
+import ml_pipelines_spark.operators.components as components
+import ml_pipelines_spark.operators.similarity as similarity
 from ml_pipelines_spark.plans.audit import duplicate_scan_fingerprints, lint
 from ml_pipelines_spark.queries import QUERIES
+
+
+@pytest.fixture(autouse=True)
+def _distributed_paths(monkeypatch):
+    """Lint the plans that run at scale. Operators with an exact driver
+    path below a size cap (``gate.collect_capped``) return a local frame
+    at the test scale; with their caps at 0 they build the distributed
+    plan instead, which is the one these rules are about."""
+    monkeypatch.setattr(components, "DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(similarity, "DRIVER_MAX_VALUES", 0)
 
 CARTESIAN_SCALAR = {
     "basket_brand_rules",
@@ -199,7 +211,6 @@ DUP_SCAN_SELF_JOIN = {
     "cohort_retention",      # first-event anchor joined back to events
     "dup_rate_by_source",    # fingerprint groups joined back to rows
     "e1_training_assembly",  # filtered customers on both assembly sides
-    "embedding_near_dup",    # vector self-join (pair generation)
     "fuzzy_name_pairs",      # supplier-name self-join
     "image_phash_near_dup",  # phash self-join
     "intersect_except_custkeys",  # set-op branches over two date windows
