@@ -118,7 +118,7 @@ def appended_files(
         raise NonAppendHistoryError(
             f"schema events visible at v={to_v} of {path}: the raw "
             "file read and the evolved read disagree; use "
-            "read_snapshot_evolved + snapshot_diff"
+            "read_snapshot + snapshot_diff"
         )
 
     old = _manifest_files(spark, path, from_version)

@@ -98,14 +98,18 @@ def connected_components(
     ``component`` is the minimum node id of the node's component.
 
     Each round combines one neighbor relaxation with one POINTER-JUMP
-    (label := label of label), so convergence is O(log diameter) rather
-    than O(diameter) — a path graph of 10^6 nodes settles in ~20 rounds
-    instead of 10^6. The jump is one extra join against the label table
-    itself, the same exchange size as the relaxation.
+    (label := label of label); the jump is one extra join against the
+    label table itself, the same exchange size as the relaxation. The
+    jump shortens only chains whose labels already point along the
+    chain: on a path whose ids run in order it settles in few rounds,
+    but on a path through ids in random order the rounds still grow
+    with the diameter — NOT O(log diameter). Measured at ``local[8]``:
+    a 64-node path through seeded random-order ids ran 531 s (hundreds
+    of jobs), and a sparse random graph of 100k edges did not close in
+    300 s at ``local[4]``, where driver union-find took 2.5 s.
 
-    Raises if the fixpoint isn't reached in ``max_iter`` rounds — with
-    shortcutting that would mean a component of diameter beyond ~2^25,
-    i.e. a pathological input, not a big one.
+    Raises if the fixpoint isn't reached in ``max_iter`` rounds — a
+    component of large diameter can hit that bound.
 
     Up to ``DRIVER_MAX_EDGES`` edges with integer or string ids are
     closed by union-find on the driver instead (module docstring); the

@@ -17,9 +17,9 @@ index files), and at 100 TB the difference is the table scan:
   stats once.
 - ``read_pruned_stats`` / ``read_pruned_rect``: band reads on
   SECONDARY columns — open only files whose recorded [min, max]
-  overlaps every band, residual filter for exactness, tombstones
-  honored. Files with no stats row are conservatively kept (stats only
-  ever shrink the read). Pays off when the layout clusters the column
+  overlaps every band, residual filter for exactness. Files with no
+  stats row are conservatively kept (stats only ever shrink the
+  read). Pays off when the layout clusters the column
   (Z-order, or natural correlation like event_id ~ event time); the
   residual filter keeps it CORRECT either way. ``_filestats`` is
   O(files x columns) metadata, read on the driver through
@@ -39,7 +39,10 @@ index files), and at 100 TB the difference is the table scan:
 
 Each reader shares its keep-set rule with its ``*_file_count`` twin,
 so the counted evidence is the plan the reader runs. An absent sidecar
-keeps every file; a present one that cannot be read raises.
+keeps every file; a present one that cannot be read raises. The kept
+files are read through ``manifest._read_live``, the table layer's one
+live-row reader: every reader here honours tombstones and DV runs and
+replays schema events, exactly like ``read_snapshot``.
 """
 
 from __future__ import annotations
@@ -54,14 +57,13 @@ from . import sidecars
 from .manifest import (
     CommitConflict,
     _abort_claim,
-    _apply_tombstones,
+    _band,
     _claim_version,
     _commit_manifest,
-    _delete_keys,
-    _file_origin,
     _latest_version,
     _manifest_rows,
     _meta,
+    _read_live,
 )
 
 _BLOOM_SEED = 0x9E3779B9
@@ -119,33 +121,11 @@ def _stats_plan(spark: SparkSession, path: str, bands, version):
     return files, [f for f in files if all(ok(f, *b) for b in bands)], v
 
 
-def _read_kept(
-    spark: SparkSession, path: str, v: int, files, keep, cond: Column
-) -> DataFrame:
-    """Read the kept files of snapshot ``v`` with ``cond`` re-applied
-    as the residual filter, tombstones honored (the snapshot's schema
-    and no rows when nothing is kept)."""
-    if not files:
-        return spark.read.parquet(f"{path}/v={v}").filter(F.lit(False))
-    if not keep:
-        return spark.read.parquet(*files).filter(F.lit(False))
-    out = spark.read.parquet(*keep).filter(cond)
-    dels = _delete_keys(
-        spark, path, v, min_origin=min(_file_origin(f) for f in keep)
-    )
-    if dels is not None:
-        key = [c for c in dels.columns if c != "v"][0]
-        out = _apply_tombstones(out, dels, key)
-    return out
-
-
-def _in_bands(bands) -> Column:
-    return reduce(
-        lambda a, b: a & b,
-        [
-            (F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi))
-            for c, lo, hi in bands
-        ],
+def _in_bands(bands):
+    """The residual predicate of band reads ``bands`` = [(col, lo, hi),
+    ...], as ``manifest._read_live`` takes it."""
+    return lambda df: reduce(
+        lambda a, b: a & b, [_band(df, c, lo, hi) for c, lo, hi in bands]
     )
 
 
@@ -223,11 +203,11 @@ def read_pruned_stats(
 ) -> DataFrame:
     """Band read on a secondary-stats column: open only the snapshot's
     files whose recorded [min, max] for ``col`` overlaps [lo, hi]
-    (unknown files kept), residual-filter for exactness, tombstones
-    honored. Mirrors ``manifest.read_pruned`` for non-sort columns."""
+    (unknown files kept), residual-filter for exactness. Mirrors
+    ``manifest.read_pruned`` for non-sort columns."""
     bands = [(col, lo, hi)]
-    files, keep, v = _stats_plan(spark, path, bands, version)
-    return _read_kept(spark, path, v, files, keep, _in_bands(bands))
+    _, keep, v = _stats_plan(spark, path, bands, version)
+    return _read_live(spark, path, v, keep, _in_bands(bands))
 
 
 def pruned_stats_file_count(
@@ -368,12 +348,12 @@ def point_lookup(
     """Point lookup through the Bloom sidecar: open only the snapshot's
     files whose bitmap contains all k probe positions (unindexed files
     conservatively kept), with the equality re-applied as a residual
-    filter — no false negatives, tombstones honored."""
-    files, keep, v = _bloom_plan(
+    filter — no false negatives."""
+    _, keep, v = _bloom_plan(
         spark, path, col, value, version, num_bits, num_hashes
     )
-    return _read_kept(
-        spark, path, v, files, keep, F.col(col) == F.lit(value)
+    return _read_live(
+        spark, path, v, keep, lambda _: F.col(col) == F.lit(value)
     )
 
 
@@ -476,7 +456,7 @@ def read_pruned_rect(
     """Rectangle read: open only files whose recorded [min, max]
     overlaps BOTH bands (the Z-order payoff — the keep set is the
     intersection of the two axes' keep sets), both bands re-applied as
-    residual filters, tombstones honored."""
+    residual filters."""
     bands = [band_a, band_b]
-    files, keep, v = _stats_plan(spark, path, bands, version)
-    return _read_kept(spark, path, v, files, keep, _in_bands(bands))
+    _, keep, v = _stats_plan(spark, path, bands, version)
+    return _read_live(spark, path, v, keep, _in_bands(bands))

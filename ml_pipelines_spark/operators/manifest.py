@@ -30,6 +30,15 @@ The residual filter makes correctness independent of HOW files were
 assigned (range-boundary sampling is not deterministic); the manifest
 affects only which files can be skipped, never the result.
 
+One reader serves every snapshot read: ``_read_live`` takes a file
+list and an optional residual predicate, and every reader — the full
+and pruned reads, the two-tier read, the staged audit read, the
+secondary-stats and bloom reads of ``operators.filestats`` — and every
+rewrite (``merge_snapshot``, the compactors, ``merge_on_read``'s victim
+scan) goes through it. So every reader honours tombstones and DV runs
+and replays schema events; planning differs only in which files it
+keeps.
+
 Metadata is a driver-side file operation: every metadata sidecar
 (manifests, tags, restores, schema events, the manifest list, staged
 and branch manifests) is listed, read and written through
@@ -50,11 +59,20 @@ shards the band overlaps — the same zone-map trick one level up.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import sidecars
 from .claims import _fs
+from .posdeletes import (
+    _LOCAL_RUNS_MAX,
+    _apply_pos_deletes,
+    _pos_delete_runs,
+    _strip_positions,
+    _with_positions,
+)
 
 
 class CommitConflict(RuntimeError):
@@ -81,9 +99,9 @@ _DRIVER_METADATA_CAP = 64 * 1024 * 1024
 # Delete-sidecar survivor sets at or below this row count enter plans
 # as driver-local frames (zero probe jobs); bigger ones go back to the
 # distributed scan — a LocalTableScan is single-partition, so a huge
-# local anti-join build side would serialize. posdeletes._LOCAL_RUNS_MAX
-# defaults to this same value.
-_LOCAL_SIDECAR_ROWS_MAX = 50_000
+# local anti-join build side would serialize. The same cap as the DV
+# runs' (posdeletes._LOCAL_RUNS_MAX).
+_LOCAL_SIDECAR_ROWS_MAX = _LOCAL_RUNS_MAX
 
 
 def _qualified(spark: SparkSession, path: str) -> str:
@@ -658,6 +676,12 @@ def _band(df: DataFrame, sort_col: str, lo, hi) -> Column:
     return (F.col(sort_col) >= lit(lo)) & (F.col(sort_col) <= lit(hi))
 
 
+def _overlaps(r, lo, hi) -> bool:
+    """Whether manifest row ``r``'s [min_v, max_v] overlaps [lo, hi] —
+    the one keep rule of every zone-map plan."""
+    return not (r["max_v"] < lo or r["min_v"] > hi)
+
+
 def read_pruned(
     spark: SparkSession,
     path: str,
@@ -673,38 +697,16 @@ def read_pruned(
     ``with_positions`` keeps the posdeletes helper columns (file path +
     row position) — the seam ``merge_on_read`` finds matched-row
     positions through WITHOUT scanning non-overlapping files."""
-    from .posdeletes import (
-        _apply_pos_deletes,
-        _pos_delete_runs,
-        _strip_positions,
-        _with_positions,
-    )
-
     manifest, v = _manifest_rows(spark, path, version)
-    keep = [
-        r["file"]
-        for r in manifest
-        if not (r["max_v"] < lo or r["min_v"] > hi)
-    ]
-    if not keep:
-        # empty result with the snapshot's schema (lazy probe)
-        out = spark.read.parquet(f"{path}/v={v}").filter(F.lit(False))
-        return _with_positions(out) if with_positions else out
-    out = spark.read.parquet(*keep)
-    runs = _pos_delete_runs(spark, path, v)
-    if runs is not None or with_positions:
-        out = _with_positions(out)
-    out = out.filter(_band(out, sort_col, lo, hi))
-    dels = _delete_keys(
-        spark, path, v, min_origin=min(_file_origin(f) for f in keep)
+    keep = [r["file"] for r in manifest if _overlaps(r, lo, hi)]
+    return _read_live(
+        spark,
+        path,
+        v,
+        keep,
+        lambda df: _band(df, sort_col, lo, hi),
+        with_positions,
     )
-    if dels is not None:
-        out = _apply_tombstones(out, dels, sort_col)
-    if runs is not None:
-        out = _apply_pos_deletes(out, runs)
-    if runs is not None and not with_positions:
-        out = _strip_positions(out)
-    return out
 
 
 def pruned_file_count(
@@ -716,10 +718,7 @@ def pruned_file_count(
 ) -> tuple[int, int]:
     """(files kept, files total) for a band — the skipping evidence."""
     manifest, _ = _manifest_rows(spark, path, version)
-    keep = sum(
-        1 for r in manifest if not (r["max_v"] < lo or r["min_v"] > hi)
-    )
-    return keep, len(manifest)
+    return sum(1 for r in manifest if _overlaps(r, lo, hi)), len(manifest)
 
 
 def read_snapshot(
@@ -732,44 +731,23 @@ def read_snapshot(
     """Full read of one snapshot (latest when ``version`` is None) —
     through the manifest's FILE LIST, so snapshots composed by
     metadata-only appends (files living under several ``v=`` dirs)
-    read correctly. ``ref`` reads the version a named tag points at
-    (time travel by name, Iceberg ``VERSION AS OF 'tag'``).
-    ``with_positions`` keeps the posdeletes helper columns (file path +
-    row position) on the result — the seam ``delete_where`` records new
-    deletion vectors through."""
-    from .posdeletes import (
-        _apply_pos_deletes,
-        _pos_delete_runs,
-        _strip_positions,
-        _with_positions,
-    )
-
+    read correctly, and through the schema-event log, so the result
+    carries the snapshot's logical schema. ``ref`` reads the version a
+    named tag points at (time travel by name, Iceberg ``VERSION AS OF
+    'tag'``). ``with_positions`` keeps the posdeletes helper columns
+    (file path + row position) on the result — the seam
+    ``delete_where`` records new deletion vectors through."""
     if ref is not None:
         if version is not None:
             raise ValueError("pass version OR ref, not both")
         version = resolve_ref(spark, path, ref)
     manifest, v = _manifest_rows(spark, path, version)
     files = [r["file"] for r in manifest]
-    if not files:
-        out = spark.read.parquet(f"{path}/v={v}").filter(F.lit(False))
-        return _with_positions(out) if with_positions else out
-    out = spark.read.parquet(*files)
-    runs = _pos_delete_runs(spark, path, v)
-    if runs is not None or with_positions:
-        # capture the scan's native (file, row position) BEFORE any
-        # join strips _metadata resolution
-        out = _with_positions(out)
-    dels = _delete_keys(
-        spark, path, v, min_origin=min(_file_origin(f) for f in files)
-    )
-    if dels is not None:
-        key = [c for c in dels.columns if c != "v"][0]
-        out = _apply_tombstones(out, dels, key)
-    if runs is not None:
-        out = _apply_pos_deletes(out, runs)
-    if runs is not None and not with_positions:
-        out = _strip_positions(out)
-    return out
+    return _read_live(spark, path, v, files, with_positions=with_positions)
+
+
+# The evolved read is the only read: the old name stays for callers.
+read_snapshot_evolved = read_snapshot
 
 
 def compact_snapshot(
@@ -790,18 +768,16 @@ def compact_snapshot(
     and whose zone-map intervals overlap; compaction restores
     tight-interval, right-sized files and re-derives the zone map.
 
-    Reads through the EVOLVED pipeline (ADVICE r10): on a table with
-    schema events the rewrite replays them first, so the new files
-    physically carry the current logical schema their new origin
-    implies — a raw-schema rewrite would detach them from the event
-    log. ``sort_col`` is the column's CURRENT name.
+    Reads through ``read_snapshot``, which replays schema events: the
+    new files physically carry the current logical schema their new
+    origin implies — a raw-schema rewrite would detach them from the
+    event log. ``sort_col`` is the column's CURRENT name.
     """
     manifest, v = _manifest_rows(spark, path, None)
     total = sum(int(r["n_rows"]) for r in manifest)
     n_files = max(1, -(-total // target_rows))
     return write_manifest_table(
-        read_snapshot_evolved(spark, path, v), path, sort_col,
-        num_files=n_files,
+        read_snapshot(spark, path, v), path, sort_col, num_files=n_files
     )
 
 
@@ -831,7 +807,7 @@ def compact_small_files(
     rewrite — exactly Iceberg's per-file delete-file scoping.
 
     Schema events compose (ADVICE r10): the small files are read
-    through the EVOLVED pipeline, so a rewrite after an add/rename/drop
+    through the live-row reader, so a rewrite after an add/rename/drop
     emits files that physically carry the current logical schema —
     consistent with their new origin, which replays no events. The
     UNTOUCHED files keep their old origins, so their events still
@@ -853,7 +829,7 @@ def compact_small_files(
     data_dir = f"{path}/v={version}"
     try:
         files = [r["file"] for r in small]
-        out = _read_files_evolved(spark, path, prev, files)
+        out = _read_live(spark, path, prev, files)
         total = sum(int(r["n_rows"]) for r in small)  # pre-delete bound
         n_files = max(1, -(-total // target_rows))
         (
@@ -1062,12 +1038,8 @@ def merge_snapshot(
     # copy-on-write.
     for _attempt in range(max_retries + 1):
         manifest, prev = _manifest_rows(spark, path, None)
-        touched = [
-            r for r in manifest if not (r["max_v"] < lo or r["min_v"] > hi)
-        ]
-        carried = [
-            r for r in manifest if (r["max_v"] < lo or r["min_v"] > hi)
-        ]
+        touched = [r["file"] for r in manifest if _overlaps(r, lo, hi)]
+        carried = [r for r in manifest if not _overlaps(r, lo, hi)]
         version = prev + 1
         data_dir = f"{path}/v={version}"
         if not _claim_version(spark, path, version):
@@ -1080,44 +1052,25 @@ def merge_snapshot(
                     "active, run sweep_orphan_versions"
                 )
             continue  # the winner committed — RE-PLAN from the new manifest
-        if touched:
-            from .posdeletes import (
-                _apply_pos_deletes,
-                _pos_delete_runs,
-                _strip_positions,
-                _with_positions,
-            )
-
-            touched_files = [r["file"] for r in touched]
-            old_rows = spark.read.parquet(*touched_files)
-            runs = _pos_delete_runs(spark, path, prev)
-            if runs is not None:
-                old_rows = _with_positions(old_rows)
-            dels = _delete_keys(
-                spark,
-                path,
-                prev,
-                min_origin=min(_file_origin(f) for f in touched_files),
-            )
-            if dels is not None:
-                # honor tombstones: a rewrite must not resurrect deleted
-                # rows — origin-scoped, so a key re-inserted after its
-                # delete is NOT re-killed here
-                old_rows = _apply_tombstones(old_rows, dels, sort_col)
-            if runs is not None:
-                # same no-resurrection contract for deletion vectors;
-                # the rewrite drops these files from the manifest, so
-                # their DV rows go inert after this merge
-                old_rows = _strip_positions(
-                    _apply_pos_deletes(old_rows, runs)
-                )
-            survivors = old_rows.join(
-                updates.select(sort_col).distinct(), sort_col, "left_anti"
-            )
-            merged = survivors.unionByName(updates)
-        else:
-            merged = updates
+        # the plan is built inside the try: an analysis error in it
+        # (updates whose columns do not match the table) must release
+        # the claim like a failed write
         try:
+            merged = updates
+            if touched:
+                # the touched rows come through the live-row reader: a
+                # rewrite must not resurrect rows deleted by tombstones
+                # or DV runs (the DV rows of these files go inert once
+                # the merge drops them from the manifest)
+                merged = (
+                    _read_live(spark, path, prev, touched)
+                    .join(
+                        updates.select(sort_col).distinct(),
+                        sort_col,
+                        "left_anti",
+                    )
+                    .unionByName(updates)
+                )
             (
                 merged.repartitionByRange(num_files, sort_col)
                 .sortWithinPartitions(sort_col)
@@ -1220,48 +1173,38 @@ def read_pruned_two_tier(
     """Band read planned through the manifest LIST: collect the list
     (O(shards) rows), open ONLY the manifest shards whose aggregate
     interval overlaps [lo, hi], prune data files from those shards'
-    rows, then read the surviving data files with the band re-applied
-    as a residual filter (and tombstones honored, like ``read_pruned``).
-    Shards — and therefore the file-level metadata of everything
-    outside the band — are never opened. Conservative-correct: a data
-    file overlapping the band forces its shard's aggregate bounds to
-    overlap too, so shard pruning can skip only shards with no
-    qualifying file."""
+    rows, then read the surviving data files through the live-row
+    reader with the band re-applied as a residual filter — the same
+    rows ``read_pruned`` returns. Shards — and therefore the file-level
+    metadata of everything outside the band — are never opened (a band
+    no file overlaps opens the one-tier manifest once, for the schema
+    of one of its files). Conservative-correct: a data file overlapping
+    the band forces its shard's aggregate bounds to overlap too, so
+    shard pruning can skip only shards with no qualifying file."""
+    import pyarrow.dataset as pds
+
     listing, v = _list_rows(spark, path, version)
     shard_files = [
         r["shard_file"]
         for r in listing
         if not (r["shard_max"] < lo or r["shard_min"] > hi)
     ]
-    if not shard_files:
-        return spark.read.parquet(f"{path}/v={v}").filter(F.lit(False))
-    import pyarrow.dataset as pds
-
-    fs, root = _meta(spark, path)
-    opened = pds.dataset(
-        [
-            f"{root}/_manifest_shards/v={v}/{f.rsplit('/', 1)[-1]}"
-            for f in shard_files
-        ],
-        filesystem=fs,
-        format="parquet",
+    keep = []
+    if shard_files:
+        fs, root = _meta(spark, path)
+        opened = pds.dataset(
+            [
+                f"{root}/_manifest_shards/v={v}/{f.rsplit('/', 1)[-1]}"
+                for f in shard_files
+            ],
+            filesystem=fs,
+            format="parquet",
+        )
+        manifest = _normalize_arrow_timestamps(opened.to_table()).to_pylist()
+        keep = [r["file"] for r in manifest if _overlaps(r, lo, hi)]
+    return _read_live(
+        spark, path, v, keep, lambda df: _band(df, sort_col, lo, hi)
     )
-    manifest = _normalize_arrow_timestamps(opened.to_table()).to_pylist()
-    keep = [
-        r["file"]
-        for r in manifest
-        if not (r["max_v"] < lo or r["min_v"] > hi)
-    ]
-    if not keep:
-        return spark.read.parquet(f"{path}/v={v}").filter(F.lit(False))
-    out = spark.read.parquet(*keep)
-    out = out.filter(_band(out, sort_col, lo, hi))
-    dels = _delete_keys(
-        spark, path, v, min_origin=min(_file_origin(f) for f in keep)
-    )
-    if dels is not None:
-        out = _apply_tombstones(out, dels, sort_col)
-    return out
 
 
 def pruned_shard_count(
@@ -1382,12 +1325,10 @@ def drop_column(spark: SparkSession, path: str, name: str) -> int:
     return _append_schema_event(spark, path, "drop", name=name)
 
 
-def _replay_events(df: DataFrame, events, origin: int) -> DataFrame:
-    """Apply the schema events issued after ``origin`` to a frame read
-    from files of that origin."""
+def _replay_events(df: DataFrame, events) -> DataFrame:
+    """Apply ``events`` — those issued after the origin of the files
+    ``df`` reads (earlier ones are baked into their physical schema)."""
     for r in events:
-        if int(r["v"]) <= origin:
-            continue  # baked into the physical schema already
         if r["kind"] == "add":
             col = (
                 F.expr(r["default_sql"]).cast(r["dtype"])
@@ -1416,84 +1357,99 @@ def _current_key_name(events, key: str, from_version: int) -> str:
     return key
 
 
-def _read_files_evolved(
+def _read_live(
     spark: SparkSession,
     path: str,
     v: int,
     files: list[str],
+    where: Callable[[DataFrame], Column] | None = None,
     with_positions: bool = False,
 ) -> DataFrame:
-    """The evolved read pipeline restricted to an explicit NON-EMPTY
-    file subset of snapshot ``v``: per-origin event replay, tombstones
-    forward-mapped through renames, DV runs applied. This is the shared
-    engine of ``read_snapshot_evolved`` AND the maintenance writers
-    (``compact_small_files``, ``merge_on_read``'s victim scan) — a
-    rewriter that read raw physical schemas would emit new-origin files
-    carrying a pre-event schema, silently detaching them from the
-    event log (ADVICE r10). ``with_positions`` keeps the posdeletes
-    helper columns on the result (captured per ORIGIN-GROUP scan,
-    before replay — events never touch the ``__pd_*`` names)."""
-    from .posdeletes import (
-        _apply_pos_deletes,
-        _pos_delete_runs,
-        _strip_positions,
-        _with_positions,
-    )
+    """The one reader of snapshot ``v``'s live rows, restricted to
+    ``files`` (its whole file list, a pruned keep set, a rewrite's
+    touched files or a staged manifest's files). Every snapshot read
+    and every rewrite goes through here, so none can drift from
+    another:
 
+    - schema events: files are grouped by the events still pending at
+      their origin, each group replays its events (adds fill defaults,
+      renames alias, drops prune) and the groups union by name. With
+      no event newer than the oldest origin — every table without an
+      ALTER — that is ONE ``spark.read.parquet(*files)``. A rewriter
+      that read raw physical schemas would emit new-origin files
+      carrying a pre-event schema, detached from the event log.
+    - ``where``: an optional residual predicate, a function of the
+      evolved frame returning a Column (so literals can follow the
+      column's type, see ``_band``).
+    - tombstones: one origin-scoped anti-join; only when the key was
+      renamed are they split by delete version, each batch mapped
+      through the renames issued after it.
+    - DV runs: anti-joined on the scan's native (file, row position),
+      captured per scan before any join; ``with_positions`` keeps the
+      posdeletes helper columns on the result.
+
+    Empty ``files`` (nothing survives pruning) returns no rows in the
+    snapshot's schema, read through one of its files so events and
+    positions apply as to any other read."""
+    empty = not files
+    if empty:
+        files = [r["file"] for r in _manifest_rows(spark, path, v)[0][:1]]
+        if not files:
+            out = spark.read.parquet(f"{path}/v={v}").filter(F.lit(False))
+            return _with_positions(out) if with_positions else out
     events = _schema_events(spark, path, v)
     runs = _pos_delete_runs(spark, path, v)
-    by_origin: dict[int, list[str]] = {}
+    by_baked: dict[int, list[str]] = {}
     for f in files:
-        by_origin.setdefault(_file_origin(f), []).append(f)
+        o = _file_origin(f)
+        by_baked.setdefault(
+            sum(1 for e in events if int(e["v"]) <= o), []
+        ).append(f)
 
     def _scan(grp: list[str]) -> DataFrame:
         df = spark.read.parquet(*grp)
         if runs is not None or with_positions:
+            # capture the scan's native (file, row position) BEFORE any
+            # join strips _metadata resolution
             df = _with_positions(df)
         return df
 
     parts = [
-        _replay_events(_scan(grp), events, origin)
-        for origin, grp in sorted(by_origin.items())
+        _replay_events(_scan(grp), events[baked:])
+        for baked, grp in sorted(by_baked.items())
     ]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
+    if empty:
+        out = out.filter(F.lit(False))
+    elif where is not None:
+        out = out.filter(where(out))
     dels = _delete_keys(
-        spark, path, v, min_origin=min(by_origin)
+        spark, path, v, min_origin=min(_file_origin(f) for f in files)
     )
     if dels is not None:
         key = [c for c in dels.columns if c != "v"][0]
-        # the read-side frame knows the key by its CURRENT name; split
-        # tombstones by delete version so each batch maps through only
-        # the renames issued after it
-        for dv in sorted({int(r["v"]) for r in dels.select("v").collect()}):
-            batch = dels.filter(F.col("v") == dv)
-            cur = _current_key_name(events, key, dv)
-            out = _apply_tombstones(
-                out, batch.withColumnRenamed(key, cur), cur
-            )
+        renamed = any(
+            e["kind"] == "rename" and e["old_name"] == key for e in events
+        )
+        if renamed:
+            # tombstones store the key under its name at delete time:
+            # map each delete batch through the renames issued after it
+            dvs = {int(r["v"]) for r in dels.select("v").collect()}
+            for dv in sorted(dvs):
+                cur = _current_key_name(events, key, dv)
+                batch = dels.filter(F.col("v") == dv)
+                out = _apply_tombstones(
+                    out, batch.withColumnRenamed(key, cur), cur
+                )
+        else:
+            out = _apply_tombstones(out, dels, key)
     if runs is not None:
         out = _apply_pos_deletes(out, runs)
-    if runs is not None and not with_positions:
-        out = _strip_positions(out)
+        if not with_positions:
+            out = _strip_positions(out)
     return out
-
-
-def read_snapshot_evolved(
-    spark: SparkSession, path: str, version: int | None = None
-) -> DataFrame:
-    """Full snapshot read honoring the schema-event log: files are
-    grouped by origin version, each group replays the events issued
-    after its origin (adds fill defaults, renames alias, drops prune),
-    and the groups union by name. Tombstone keys are forward-mapped
-    through renames issued after the delete. Without a ``_schema_events``
-    log this equals ``read_snapshot``."""
-    manifest, v = _manifest_rows(spark, path, version)
-    files = [r["file"] for r in manifest]
-    if not files:
-        return spark.read.parquet(f"{path}/v={v}").filter(F.lit(False))
-    return _read_files_evolved(spark, path, v, files)
 
 
 def _file_origin(file: str) -> int:
@@ -2182,34 +2138,11 @@ def read_staged(
     spark: SparkSession, path: str, version: int
 ) -> DataFrame:
     """AUDIT step: the exact table state ``publish_staged`` would make
-    live — the staged manifest's files with the table's current
-    tombstones applied. Quality gates run here; a failure costs an
-    abort, never a bad published version."""
-    from .posdeletes import (
-        _apply_pos_deletes,
-        _pos_delete_runs,
-        _strip_positions,
-        _with_positions,
-    )
-
+    live — the staged manifest's files through the live-row reader.
+    Quality gates run here; a failure costs an abort, never a bad
+    published version."""
     staged = _sidecar_rows(spark, path, f"_staged_manifest/v={version}")
-    files = [r["file"] for r in staged]
-    out = spark.read.parquet(*files)
-    runs = _pos_delete_runs(spark, path, version)
-    if runs is not None:
-        out = _with_positions(out)
-    dels = _delete_keys(
-        spark,
-        path,
-        version,
-        min_origin=min(_file_origin(f) for f in files),
-    )
-    if dels is not None:
-        key = [c for c in dels.columns if c != "v"][0]
-        out = _apply_tombstones(out, dels, key)
-    if runs is not None:
-        out = _strip_positions(_apply_pos_deletes(out, runs))
-    return out
+    return _read_live(spark, path, version, [r["file"] for r in staged])
 
 
 def publish_staged(spark: SparkSession, path: str, version: int) -> int:
@@ -2537,8 +2470,6 @@ def snapshot_row_count(
     tombstone's hit count is data-dependent), deferred to
     ``read_snapshot`` so counting can never drift from read
     semantics."""
-    from .posdeletes import _pos_delete_runs
-
     manifest, v = _manifest_rows(spark, path, version)
     if not manifest:
         return 0

@@ -432,11 +432,31 @@ def compact_spec_snapshot(spark: SparkSession, path: str) -> int:
         groups.setdefault(key, []).append(r["file"])
     keys = sorted(groups)
     try:
-        for gi, key in enumerate(keys):
-            df = _drop_shadows(spark.read.parquet(*groups[key]))
-            df.repartition(1).write.mode("errorifexists").parquet(
-                f"{data_dir}/g={gi}"
+        # one read and one write for all tuples, so the job count does
+        # not grow with them: each row's group id is looked up by its
+        # file in a literal map (O(files), like the manifest; a join
+        # would cost a broadcast job) and the write partitions by it.
+        # mergeSchema: files of different specs carry other shadows
+        gid = F.create_map(
+            *[
+                F.lit(x)
+                for gi, key in enumerate(keys)
+                for f in groups[key]
+                for x in (f, gi)
+            ]
+        )
+        (
+            _drop_shadows(
+                spark.read.option("mergeSchema", "true").parquet(
+                    *[r["file"] for r in manifest]
+                )
             )
+            .withColumn("g", gid[F.input_file_name()])
+            .repartition("g")
+            .write.mode("errorifexists")
+            .partitionBy("g")
+            .parquet(data_dir)
+        )
         # per-file row counts from the written files themselves, in one
         # aggregate over the new version (g= names each file's group)
         per_file = (

@@ -51,10 +51,11 @@ _PD_FILE, _PD_POS = "__pd_file", "__pd_pos"
 # (zero probe jobs); bigger ones go back to the distributed scan — a
 # LocalTableScan is single-partition, so exploding a near-row-count
 # scattered-delete run table locally serializes the DV join's build.
-# Defaults to the shared manifest._LOCAL_SIDECAR_ROWS_MAX (one knob,
-# two delete sidecars); kept as a module attr so tests can retune the
-# DV path independently.
-from .manifest import _LOCAL_SIDECAR_ROWS_MAX as _LOCAL_RUNS_MAX  # noqa: E402
+# manifest._LOCAL_SIDECAR_ROWS_MAX (tombstones) takes this value (one
+# cap, two delete sidecars) — defined here because the manifest layer
+# imports this module's read helpers at load time; tests retune the DV
+# path through this attribute alone.
+_LOCAL_RUNS_MAX = 50_000
 
 
 class EmptyBatchError(ValueError):
@@ -180,27 +181,30 @@ def merge_on_read(
     The position-finding scan is FILE-PRUNED: only files whose zone-map
     interval overlaps the batch's [min(key), max(key)] are opened, so
     locating victims in a wide table reads a handful of files — and it
-    reads them through the EVOLVED pipeline (ADVICE r10), so on a
-    table whose key column was renamed the semi-join still matches old
-    files under the key's CURRENT name. ``key`` must be the table's
-    sort/zone column, by its current name, and unique within
-    ``updates`` (an upsert batch, not a changelog — same contract as
-    ``merge_snapshot``).
+    reads them through the live-row reader, which replays schema
+    events, so on a table whose key column was renamed the semi-join
+    still matches old files under the key's CURRENT name. ``key`` must
+    be the table's sort/zone column, by its current name, and unique
+    within ``updates`` (an upsert batch, not a changelog — same
+    contract as ``merge_snapshot``).
 
     Semantics match ``merge_snapshot`` exactly: matched keys take the
     batch's row, unmatched batch keys insert, and a later re-insert of
     a DV-killed key survives (the DV pins physical positions in OLD
     files; the new row lives in a new file). Readers need no new code —
-    every snapshot reader already stitches DV runs and the manifest.
+    every snapshot read goes through the one live-row reader, which
+    applies DV runs.
     """
     from .manifest import (
         CommitConflict,
         _abort_claim,
+        _band,
         _claim_version,
         _is_path_exists_error,
         _manifest_rows,
+        _overlaps,
         _purge_sidecar_partition,
-        _read_files_evolved,
+        _read_live,
         _release_claim,
         _sidecar_partition_exists,
         _verify_sidecar_before_commit,
@@ -226,18 +230,17 @@ def merge_on_read(
         )
     data_dir = f"{path}/v={version}"
     try:
-        keep = [
-            r["file"]
-            for r in manifest
-            if not (r["max_v"] < band["lo"] or r["min_v"] > band["hi"])
-        ]
+        lo, hi = band["lo"], band["hi"]
+        keep = [r["file"] for r in manifest if _overlaps(r, lo, hi)]
         if keep:
-            band_f = (F.col(key) >= F.lit(band["lo"])) & (
-                F.col(key) <= F.lit(band["hi"])
+            cur = _read_live(
+                spark,
+                path,
+                prev,
+                keep,
+                lambda df: _band(df, key, lo, hi),
+                with_positions=True,
             )
-            cur = _read_files_evolved(
-                spark, path, prev, keep, with_positions=True
-            ).filter(band_f)
             hit = cur.join(
                 F.broadcast(updates.select(key).distinct()),
                 key,

@@ -126,6 +126,22 @@ def test_append_conflict_exhausts_retries_on_orphan(spark, table, monkeypatch):
     assert read_snapshot(spark, table).count() == 150
 
 
+def test_failed_merge_plan_releases_its_claim(spark, table, monkeypatch):
+    # The merge claims v=2, then its plan fails analysis (the updates
+    # carry a column the table lacks). The failure must release the
+    # claim: the next append commits v=2 instead of waiting out the
+    # held claim and raising CommitConflict.
+    from pyspark.errors import AnalysisException
+
+    monkeypatch.setattr(M, "_CLAIM_WAIT_S", 0.5)
+    bad = _rows(spark, 10, 20).withColumn("extra", F.lit(1))
+    with pytest.raises(AnalysisException):
+        merge_snapshot(spark, table, "k", bad)
+    assert versions(spark, table) == [1]
+    assert append_snapshot(_rows(spark, 100, 110), table, "k") == 2
+    assert read_snapshot(spark, table).count() == 110
+
+
 def test_publish_branch_rename_loser_gets_conflict(spark, table, monkeypatch):
     # Both branches validate against latest=1, both target v=2; the
     # rename loser must receive a retryable "conflict", not an IOError.

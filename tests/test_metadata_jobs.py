@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 import ml_pipelines_spark.operators.filestats as FS
 import ml_pipelines_spark.operators.manifest as M
 import ml_pipelines_spark.operators.partspec as PS
+import ml_pipelines_spark.operators.posdeletes as P
 
 _groups = itertools.count()
 
@@ -90,6 +91,46 @@ def test_delete_runs_only_its_tombstone_write(spark, table, tmp_path):
     assert M.snapshot_row_count(spark, table) == 240
 
 
+def test_live_reads_and_rewrites_pin_their_jobs(spark, table):
+    # a table with tombstones and DV runs and no schema event — the
+    # corpus table's shape: its reads and rewrites run no more jobs
+    # than before they shared one reader (the counts measured then)
+    M.delete_from_snapshot(
+        spark, table, "k", spark.range(10, 30).select(F.col("id").alias("k"))
+    )
+    P.delete_where(spark, table, "k >= 250")
+    updates = spark.range(40, 60).select(
+        F.col("id").alias("k"), F.lit(-1).cast("long").alias("val")
+    )
+    counts = {
+        "read_snapshot": _jobs(
+            spark, lambda: M.read_snapshot(spark, table).count()
+        ),
+        "read_pruned": _jobs(
+            spark, lambda: M.read_pruned(spark, table, "k", 0, 99).count()
+        ),
+        "merge_snapshot": _jobs(
+            spark, M.merge_snapshot, spark, table, "k", updates
+        ),
+        "compact_small_files": _jobs(
+            spark, M.compact_small_files, spark, table, "k", target_rows=200
+        ),
+    }
+    before = {
+        "read_snapshot": 5,
+        "read_pruned": 5,
+        "merge_snapshot": 12,
+        "compact_small_files": 11,
+    }
+    assert all(counts[name] <= n for name, n in before.items()), counts
+    got = {r.k: r.val for r in M.read_snapshot(spark, table).collect()}
+    assert got == {
+        k: -1 if 40 <= k < 60 else 2 * k
+        for k in range(250)
+        if not 10 <= k < 30
+    }
+
+
 def _stats_aggregate(spark, path, cols):
     """write_file_stats's per-file aggregate over the snapshot, alone."""
     files = [r["file"] for r in M._manifest_rows(spark, path, None)[0]]
@@ -137,6 +178,25 @@ def test_spec_write_runs_only_its_write_and_aggregate(spark, tmp_path):
     assert _jobs(spark, PS.write_spec_snapshot, df, spec, ["s"], "k") == n
     assert _jobs(spark, PS.write_spec_snapshot, df, spec, ["s"]) == n
     assert PS.spec_versions(spark, spec) == [1, 2]
+
+
+def test_spec_compaction_jobs_do_not_grow_with_tuples(spark, tmp_path):
+    # one read and one write whatever the tuple count (one read and one
+    # write per tuple before: 6 jobs for 1 tuple, 12 for 3)
+    counts = {}
+    for n in (1, 3):
+        spec = str(tmp_path / f"spec{n}")
+        df = spark.range(0, 300).select(
+            F.col("id").alias("k"), (F.col("id") % n).cast("string").alias("s")
+        )
+        PS.write_spec_snapshot(df, spec, ["s"])
+        PS.write_spec_snapshot(df, spec, ["s"])
+        counts[n] = _jobs(spark, PS.compact_spec_snapshot, spark, spec)
+        got = PS.read_spec_pruned(spark, spec, {})
+        keys = sorted(r.k for r in got.collect())
+        assert keys == sorted(2 * list(range(300)))
+        assert PS.spec_pruned_file_count(spark, spec, {}) == (n, n)
+    assert counts[3] == counts[1] <= 6, counts
 
 
 def test_file_counters_run_no_spark_job(spark, table, tmp_path):
