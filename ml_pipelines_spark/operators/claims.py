@@ -1,9 +1,10 @@
 """Pluggable commit-claim backends for the table layer.
 
-Every commit in the manifest/partspec/filestats table layer is
-arbitrated by an ATOMIC CLAIM on the target version id: whoever
-creates the claim marker first owns the version; everyone else loses,
-re-reads the advanced table, and retries. The claim primitive must be
+Every commit in the manifest/partspec/filestats table layer goes
+through ``manifest._commit``, which arbitrates it by an ATOMIC CLAIM on
+the target version id: whoever creates the claim marker first owns the
+version; everyone else loses, re-reads the advanced table, and
+retries. The claim primitive must be
 atomic create-if-absent — and WHERE that primitive exists is a
 deployment property, not a code property:
 

@@ -55,10 +55,8 @@ from pyspark.sql import functions as F
 
 from . import sidecars
 from .manifest import (
-    CommitConflict,
-    _abort_claim,
     _band,
-    _claim_version,
+    _commit,
     _commit_manifest,
     _latest_version,
     _manifest_rows,
@@ -400,50 +398,40 @@ def write_manifest_table_zordered(
     Returns the new version."""
     from .layout import hilbert_key, zorder_key
 
-    spark = df.sparkSession
-    # existence-probed bootstrap: a _manifest that EXISTS but fails to
-    # read is corruption and must raise, not fork a parallel v=1
-    # history (manifest._latest_version)
-    version = (_latest_version(spark, path) or 0) + 1
-    if not _claim_version(spark, path, version):
-        raise CommitConflict(
-            f"z-ordered write to {path} lost the claim for v={version}"
-        )
-    data_dir = f"{path}/v={version}"
-    if curve == "morton":
-        key = zorder_key(df, col_a, col_b, bits)
-    elif curve == "hilbert":
-        key = hilbert_key(df, col_a, col_b, bits)
-    else:
+    curves = {"morton": zorder_key, "hilbert": hilbert_key}
+    if curve not in curves:
         raise ValueError(f"unknown curve {curve!r} (morton|hilbert)")
-    z = df.withColumn("__z", key)
-    try:
+    spark = df.sparkSession
+
+    def write(version, _):
+        # the curve key runs a min/max job over ``df``: under the claim,
+        # so an empty frame or a missing column backs out like any
+        # failed write
         (
-            z.repartitionByRange(num_files, "__z")
+            df.withColumn("__z", curves[curve](df, col_a, col_b, bits))
+            .repartitionByRange(num_files, "__z")
             .sortWithinPartitions("__z")
             .drop("__z")
             .write.mode("errorifexists")
-            .parquet(data_dir)
+            .parquet(f"{path}/v={version}")
         )
-        _commit_manifest(spark, path, version, data_dir, col_a)
+        _commit_manifest(spark, path, version, col_a)
         write_file_stats(spark, path, [col_a, col_b], version)
-    except Exception:
-        # failed post-claim commit: back out the partial version and
-        # release the claim so the table is not wedged (ADVICE r9).
-        # Unlike the manifest.py writers the manifest write is NOT the
-        # last step here (the stats pass follows), so the abort must
-        # also un-commit the manifest — a manifest referencing a
-        # deleted data dir would corrupt the table. Stranded _filestats
-        # rows are harmless: stats are consulted only for files the
-        # live manifest lists.
-        try:
-            fs, root = _meta(spark, path)
-            fs.delete_dir(f"{root}/_manifest/v={version}")
-        except Exception:
-            pass
-        _abort_claim(spark, path, version)
-        raise
-    return version
+
+    # existence-probed bootstrap: a _manifest that EXISTS but fails to
+    # read is corruption and must raise, not fork a parallel v=1
+    # history (manifest._latest_version). The stats pass follows the
+    # manifest write, so a failed one backs the manifest out too
+    # (``_commit`` deletes everything v=N owns); stranded _filestats
+    # rows are harmless: stats are consulted only for files the live
+    # manifest lists.
+    return _commit(
+        spark,
+        path,
+        "z-ordered write",
+        lambda: ((_latest_version(spark, path) or 0) + 1, None),
+        write,
+    )
 
 
 def read_pruned_rect(

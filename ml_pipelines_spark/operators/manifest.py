@@ -47,6 +47,19 @@ runs no Spark job. Spark jobs are spent on data: the data writes, the
 one zone-map aggregate per commit, and the data-sized ``_deletes`` /
 ``_posdeletes`` sidecars.
 
+Commit protocol: every commit of this module, ``operators.posdeletes``,
+``operators.partspec`` and ``operators.filestats`` goes through one
+seam, ``_commit``. It claims version N (``operators.claims``), runs the
+commit's write under the claim and, on failure, backs out what N owns
+and releases the claim, so one failed commit never wedges the next. A
+claimed version whose target already exists is a crashed writer's
+wreckage and raises ``CommitConflict``. What version N owns is one list
+(``_version_paths``), which ``sweep_orphan_versions`` deletes too: for
+a manifest table ``v=N``, ``_manifest/v=N``, ``_staged_manifest/v=N``,
+``_deletes/v=N`` and ``_posdeletes/v=N``; for a spec table ``v=N`` and
+``_specmanifest/v=N``. Publishing a branch (a rename), aborting a stage
+and minting a tag sequence number keep their own claim calls.
+
 Scale bound, stated: planning reads the manifest on the driver —
 O(files) rows of a few hundred bytes. That holds comfortably to ~10^6
 files per snapshot (the compactor exists precisely to keep file counts
@@ -343,9 +356,10 @@ def _claim_version(spark: SparkSession, path: str, version: int) -> bool:
     default, or a CAS catalog for object stores where the filesystem
     has no atomic primitive (the Iceberg deployment model; the
     reference's data lives on GCS). Claims are permanent markers for
-    committed versions; ``abort_staged`` releases its claim, and
-    ``sweep_orphan_versions`` clears crashed writers' claims above the
-    latest committed version."""
+    committed versions; a failed commit releases its own (``_commit``),
+    ``abort_staged`` releases its claim, and ``sweep_orphan_versions``
+    clears crashed writers' claims above the latest committed
+    version."""
     from .claims import get_claim_backend
 
     return get_claim_backend().claim(spark, path, f"v={version}")
@@ -357,53 +371,108 @@ def _release_claim(spark: SparkSession, path: str, version: int) -> None:
     get_claim_backend().release(spark, path, f"v={version}")
 
 
-def _abort_claim(spark: SparkSession, path: str, version: int) -> None:
-    """Back out a FAILED post-claim commit: best-effort delete of the
-    claimed version's (partial) data directory, then release the
-    claim. Without this, a transient non-crash failure after a won
-    claim — executor OOM, a bad input schema — leaves a permanent
-    claim marker that wedges every later writer with CommitConflict
-    until someone manually runs ``sweep_orphan_versions``, even though
-    this driver is alive and can clean up (ADVICE r9). Never raises:
-    the caller re-raises the ORIGINAL error, which is the one the user
-    must see. Deleting ``v=N`` is safe here because the claim is ours
-    and no manifest references it (the commit never completed)."""
-    try:
-        fs, jvm = _fs(spark, path)
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(f"{path}/v={version}"), True
-        )
-    except Exception:
-        pass
-    try:
-        _release_claim(spark, path, version)
-    except Exception:
-        pass
+def _version_paths(path: str, version, manifest_dir: str = "_manifest"):
+    """What version ``version`` of the table at ``path`` owns, as
+    ``(appended, targets)`` — the one list a back-out and
+    ``sweep_orphan_versions`` delete.
+
+    ``appended``: the delete sidecars ``_deletes/v=N`` and
+    ``_posdeletes/v=N``. Commits append to them, so they are this
+    commit's even when its target collided, and a stranded one is a
+    data-loss hazard, not litter: its tombstones or DV runs would turn
+    ACTIVE the moment a later writer commits the same version number.
+    ``targets``: the manifest ``<manifest_dir>/v=N``, for manifest
+    tables the staged manifest, and then ``v=N`` — manifests first, so
+    no reader meets a manifest whose files are gone. A spec table
+    (``manifest_dir="_specmanifest"``) owns only its manifest and
+    ``v=N``. ``version="*"`` yields glob patterns."""
+    manifests = [f"{path}/{manifest_dir}/v={version}"]
+    if manifest_dir != "_manifest":
+        return [], manifests + [f"{path}/v={version}"]
+    appended = [f"{path}/{d}/v={version}" for d in ("_deletes", "_posdeletes")]
+    manifests.append(f"{path}/_staged_manifest/v={version}")
+    return appended, manifests + [f"{path}/v={version}"]
 
 
-def _purge_sidecar_partition(
-    spark: SparkSession, path: str, sidecar: str, version: int
-) -> None:
-    """Best-effort removal of a delete-sidecar's ``v=N`` partition —
-    backing out a failed commit. A STRANDED sidecar partition is a
-    data-loss hazard, not mere litter: tombstones or DV runs written
-    for a version that never produced a manifest become ACTIVE the
-    moment a later writer commits the same version number, silently
-    deleting rows no committed operation asked to delete. While the
-    claim is held the stranded rows are invisible (readers cap at the
-    latest manifest), so purging before the claim is released closes
-    the window. Never raises (cleanup path — the caller re-raises the
-    original error)."""
+def _remove(spark: SparkSession, path: str, paths: list[str]) -> None:
+    """Best-effort delete of ``paths`` (what a version owns, see
+    ``_version_paths``), then of each sidecar directory a delete left
+    empty: an empty ``_manifest`` reads as a corrupt table, so a failed
+    first commit would wedge the next one. Never raises — on a back-out
+    the ORIGINAL error is the one the user must see."""
+    fs, jvm = _fs(spark, path)
+    root = path.rstrip("/")
+    for p in paths:
+        for target, recursive in ((p, True), (p.rsplit("/", 1)[0], False)):
+            if target.rstrip("/") == root:
+                continue
+            try:
+                # non-recursive: only an EMPTY directory goes
+                fs.delete(jvm.org.apache.hadoop.fs.Path(target), recursive)
+            except Exception:
+                pass
+
+
+def _commit(
+    spark: SparkSession,
+    path: str,
+    what: str,
+    plan: Callable[[], tuple],
+    write: Callable,
+    retries: int = 0,
+    manifest_dir: str = "_manifest",
+):
+    """The table layer's one commit seam: claim a version, write under
+    the claim, back out on failure. Returns the committed version.
+
+    ``plan()`` returns ``(version, planned)``. A lost claim waits for
+    the winner's manifest (``_await_claim_release``) and re-plans, up to
+    ``retries`` times; then it raises ``CommitConflict``.
+    ``write(version, planned)`` runs under the claim. If it fails:
+
+    - the target already existed (``_is_path_exists_error``): the
+      wreckage of a crashed pre-claim writer, not this commit's to
+      delete. The delete sidecars this commit appended to are purged,
+      the claim is released and ``CommitConflict`` names
+      ``sweep_orphan_versions``;
+    - otherwise everything the version owns (``_version_paths``) is
+      deleted, the claim is released and the original error propagates,
+      so one transient failure never wedges the table (ADVICE r9).
+
+    Work after the commit point (the ``_restores`` and
+    ``_schema_events`` rows) runs after this returns: a committed
+    manifest is never backed out."""
+    for attempt in range(retries + 1):
+        version, planned = plan()
+        if _claim_version(spark, path, version):
+            break
+        if attempt == retries or not _await_claim_release(
+            spark, path, version
+        ):
+            raise CommitConflict(
+                f"{what} at {path} lost the claim for v={version}; "
+                "another writer or a pending stage holds it. Retry "
+                "against the advanced table, publish or abort the stage, "
+                "or if no writer is active run sweep_orphan_versions"
+            )
     try:
-        fs, jvm = _fs(spark, path)
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(
-                f"{path}/{sidecar}/v={version}"
-            ),
-            True,
-        )
-    except Exception:
-        pass
+        write(version, planned)
+    except Exception as e:
+        appended, targets = _version_paths(path, version, manifest_dir)
+        exists = _is_path_exists_error(e)
+        _remove(spark, path, appended if exists else appended + targets)
+        try:
+            _release_claim(spark, path, version)
+        except Exception:
+            pass
+        if exists:
+            raise CommitConflict(
+                f"{what} at {path} claimed v={version} but its target "
+                "already exists (unclaimed orphan); run "
+                "sweep_orphan_versions"
+            ) from e
+        raise
+    return version
 
 
 def _sidecar_partition_exists(
@@ -508,6 +577,15 @@ def _head_version(spark: SparkSession, path: str) -> int:
     return v
 
 
+def _committed(spark: SparkSession, path: str, manifest_dir: str) -> list[int]:
+    """Committed versions listed under ``manifest_dir``, ascending."""
+    if manifest_dir == "_manifest":
+        # route through versions() — the module's one read point for
+        # the primary manifest (tests simulate stale reads there)
+        return versions(spark, path)
+    return sidecars.committed_versions(*_meta(spark, path), manifest_dir)
+
+
 def _latest_version(
     spark: SparkSession, path: str, manifest_dir: str = "_manifest"
 ) -> int | None:
@@ -520,12 +598,7 @@ def _latest_version(
     fork a parallel v=1 history over live data (VERDICT r9 item 3)."""
     if not _sidecar_exists(spark, path, manifest_dir):
         return None
-    if manifest_dir == "_manifest":
-        # route through versions() — the module's one read point for
-        # the primary manifest (tests simulate stale reads there)
-        vs = versions(spark, path)
-    else:
-        vs = sidecars.committed_versions(*_meta(spark, path), manifest_dir)
+    vs = _committed(spark, path, manifest_dir)
     if not vs:
         raise IOError(
             f"{path}/{manifest_dir} exists but holds no versions — "
@@ -544,34 +617,37 @@ def write_manifest_table(
     """Append ``df`` as the next snapshot of the manifest table at
     ``path``; returns the new version number."""
     spark = df.sparkSession
-    version = (_latest_version(spark, path) or 0) + 1
-    if not _claim_version(spark, path, version):
-        raise CommitConflict(
-            f"write to {path} lost the claim for v={version}; another "
-            "writer or a pending stage holds it"
+    return _commit(
+        spark,
+        path,
+        "write",
+        lambda: ((_latest_version(spark, path) or 0) + 1, None),
+        _append_write(df, path, sort_col, num_files),
+    )
+
+
+def _append_write(
+    df: DataFrame,
+    path: str,
+    sort_col: str,
+    num_files: int,
+    manifest_dir: str = "_manifest",
+):
+    """The ``write`` of an append-shaped commit (see ``_commit``): lay
+    ``df`` out under ``v=N``, then write the manifest: version
+    ``prev``'s rows carried forward plus the new files' zone map.
+    ``prev=None`` carries nothing — a first write, or
+    ``write_manifest_table``, whose snapshot holds only ``df``."""
+    spark = df.sparkSession
+
+    def write(version: int, prev: int | None) -> None:
+        _write_data(df, path, version, sort_col, num_files)
+        carried = (
+            _manifest_rows(spark, path, prev)[0] if prev is not None else ()
         )
-    data_dir = f"{path}/v={version}"
-    try:
-        (
-            df.repartitionByRange(num_files, sort_col)
-            .sortWithinPartitions(sort_col)
-            .write.mode("errorifexists")
-            .parquet(data_dir)
-        )
-        _commit_manifest(spark, path, version, data_dir, sort_col)
-    except Exception as e:
-        if _is_path_exists_error(e):
-            # claimed, yet the target exists: wreckage of a crashed
-            # pre-claim writer — NOT ours to delete (sweep's job)
-            _release_claim(spark, path, version)
-            raise CommitConflict(
-                f"write to {path} claimed v={version} but its target "
-                "already exists (unclaimed orphan); run "
-                "sweep_orphan_versions"
-            ) from e
-        _abort_claim(spark, path, version)
-        raise
-    return version
+        _commit_manifest(spark, path, version, sort_col, carried, manifest_dir)
+
+    return write
 
 
 def _manifest_table(spark: SparkSession, path: str, version: int | None):
@@ -607,21 +683,38 @@ def _copy_manifest(
     sidecars.write(fs, f"{root}/_manifest/v={dst_v}", tbl)
 
 
+def _write_data(
+    df: DataFrame, path: str, version: int, sort_col: str, num_files: int
+) -> None:
+    """Write ``df`` as ``num_files`` range-laid files under
+    ``<path>/v=<version>`` — each file owns a tight ``sort_col``
+    interval. ``errorifexists``: a claimed version whose directory
+    already exists is a crashed writer's wreckage (see ``_commit``)."""
+    (
+        df.repartitionByRange(num_files, sort_col)
+        .sortWithinPartitions(sort_col)
+        .write.mode("errorifexists")
+        .parquet(f"{path}/v={version}")
+    )
+
+
 def _commit_manifest(
     spark: SparkSession,
     path: str,
     version: int,
-    data_dir: str,
     sort_col: str,
     carried=(),
+    manifest_dir: str = "_manifest",
 ) -> None:
-    """Derive the just-written files' zone map in ONE PARALLEL job and
-    write carried + new manifest rows on the driver (VERDICT r10 item
-    4). ``carried``: prior manifest rows (Rows or dicts) carried
-    forward verbatim."""
-    _write_manifest(
-        spark, path, version, carried, _zone_map(spark, data_dir, sort_col)
-    )
+    """Derive the zone map of the files just written under ``v=N`` in
+    ONE PARALLEL job and write carried + new manifest rows as one
+    driver-side file (VERDICT r10 item 4), typed by the zone map's
+    schema (the sort column's type: string/date tables must not coerce
+    to bigint). ``carried``: prior manifest rows (Rows or dicts)
+    carried forward verbatim."""
+    zm = _zone_map(spark, f"{path}/v={version}", sort_col)
+    rows = list(carried) + zm.collect()
+    _write_rows(spark, path, f"{manifest_dir}/v={version}", rows, zm.schema)
 
 
 def _zone_map(spark: SparkSession, data_dir: str, sort_col: str):
@@ -640,22 +733,6 @@ def _zone_map(spark: SparkSession, data_dir: str, sort_col: str):
             F.count(F.lit(1)).alias("n_rows"),
         )
     )
-
-
-def _write_manifest(
-    spark: SparkSession,
-    path: str,
-    version: int,
-    carried,
-    zm: DataFrame,
-    manifest_dir: str = "_manifest",
-) -> None:
-    """Collect the zone-map aggregate ``zm`` (file-count rows) and
-    write carried + new manifest rows as one driver-side file, typed by
-    the zone map's schema (the sort column's type: string/date tables
-    must not coerce to bigint)."""
-    rows = list(carried) + zm.collect()
-    _write_rows(spark, path, f"{manifest_dir}/v={version}", rows, zm.schema)
 
 
 def _band(df: DataFrame, sort_col: str, lo, hi) -> Column:
@@ -820,38 +897,17 @@ def compact_small_files(
     if len(small) < 2:
         return prev
     big = [r for r in manifest if int(r["n_rows"]) >= small_rows]
-    version = prev + 1
-    if not _claim_version(spark, path, version):
-        raise CommitConflict(
-            f"compact_small_files at {path} lost the claim for "
-            f"v={version}; another writer is committing — retry"
-        )
-    data_dir = f"{path}/v={version}"
-    try:
-        files = [r["file"] for r in small]
-        out = _read_live(spark, path, prev, files)
+
+    def write(version, _):
+        out = _read_live(spark, path, prev, [r["file"] for r in small])
         total = sum(int(r["n_rows"]) for r in small)  # pre-delete bound
         n_files = max(1, -(-total // target_rows))
-        (
-            out.repartitionByRange(n_files, sort_col)
-            .sortWithinPartitions(sort_col)
-            .write.mode("errorifexists")
-            .parquet(data_dir)
-        )
-        _commit_manifest(
-            spark, path, version, data_dir, sort_col, carried=big
-        )
-    except Exception as e:
-        if _is_path_exists_error(e):
-            _release_claim(spark, path, version)
-            raise CommitConflict(
-                f"compact_small_files at {path} claimed v={version} "
-                "but its target already exists (unclaimed orphan); "
-                "run sweep_orphan_versions"
-            ) from e
-        _abort_claim(spark, path, version)
-        raise
-    return version
+        _write_data(out, path, version, sort_col, n_files)
+        _commit_manifest(spark, path, version, sort_col, carried=big)
+
+    return _commit(
+        spark, path, "compact_small_files", lambda: (prev + 1, None), write
+    )
 
 
 def append_snapshot(
@@ -870,76 +926,29 @@ def append_snapshot(
     version.
 
     Optimistic concurrency (Iceberg commit semantics): the version id
-    is CLAIMED by the ``errorifexists`` data-directory write. Two
-    writers racing to ``v=N+1`` — the loser's write fails on the
-    existing path, the latest version is re-read, and the append is
-    retried against the advanced table (appends always commute, so the
-    retry needs no re-validation). A claim that keeps failing without
-    the manifest advancing (a crashed writer's orphan directory) raises
-    ``CommitConflict`` after ``max_retries`` — ``sweep_orphan_versions``
+    is CLAIMED before the write (``_commit``). Two writers racing to
+    ``v=N+1`` — the loser's claim fails, it waits for the winner's
+    manifest, re-reads the latest version and retries against the
+    advanced table (appends always commute, so the retry needs no
+    re-validation). A claim that never resolves (a crashed writer's
+    orphan) raises ``CommitConflict`` — ``sweep_orphan_versions``
     unwedges that table."""
     spark = df.sparkSession
-    for _attempt in range(max_retries + 1):
+
+    def plan():
         try:
             prev = _latest_version(spark, path)
         except Exception:
             # _manifest exists but holds no version yet — another
-            # writer is mid-FIRST-commit (temp files only). Poll
-            # for its manifest like a lost claim and re-read; genuine
-            # corruption exhausts the retries and propagates.
-            if _attempt == max_retries or not _await_claim_release(
-                spark, path, 1
-            ):
+            # writer is mid-FIRST-commit (temp files only). Wait for its
+            # manifest and re-read; genuine corruption still raises.
+            if not _await_claim_release(spark, path, 1):
                 raise
-            continue
-        version = (prev or 0) + 1
-        data_dir = f"{path}/v={version}"
-        if not _claim_version(spark, path, version):
-            if _attempt == max_retries or not _await_claim_release(
-                spark, path, version
-            ):
-                raise CommitConflict(
-                    f"append to {path} lost the claim for v={version} "
-                    "and the claim never resolved; publish or abort "
-                    "any pending staged snapshot, or if no writer is "
-                    "active run sweep_orphan_versions (a crashed "
-                    "commit left an orphan claim)"
-                )
-            continue  # the winner's manifest landed; re-read and retry
-        try:
-            (
-                df.repartitionByRange(num_files, sort_col)
-                .sortWithinPartitions(sort_col)
-                .write.mode("errorifexists")
-                .parquet(data_dir)
-            )
-            break
-        except Exception as e:
-            if not _is_path_exists_error(e):
-                # transient write failure with the claim won: back out
-                # (partial data dir + claim) so the table is not
-                # wedged, then surface the real error (ADVICE r9)
-                _abort_claim(spark, path, version)
-                raise
-            # claimed, yet the data dir exists: wreckage of a crashed
-            # pre-claim writer — release our claim and surface it
-            _release_claim(spark, path, version)
-            raise CommitConflict(
-                f"append to {path} claimed v={version} but its data "
-                "directory already exists (unclaimed orphan); run "
-                "sweep_orphan_versions"
-            ) from e
-    try:
-        carried = (
-            _manifest_rows(spark, path, prev)[0] if prev is not None else ()
-        )
-        _commit_manifest(
-            spark, path, version, data_dir, sort_col, carried=carried
-        )
-    except Exception:
-        _abort_claim(spark, path, version)
-        raise
-    return version
+            prev = _latest_version(spark, path)
+        return (prev or 0) + 1, prev
+
+    write = _append_write(df, path, sort_col, num_files)
+    return _commit(spark, path, "append", plan, write, retries=max_retries)
 
 
 def ledgered_batch_sink(stream_df: DataFrame, checkpoint_dir: str, apply):
@@ -1036,66 +1045,37 @@ def merge_snapshot(
     # RE-PLANS from the advanced manifest (re-prune, re-read tombstones)
     # — that re-plan IS Iceberg's commit re-validation for
     # copy-on-write.
-    for _attempt in range(max_retries + 1):
+
+    def plan():
         manifest, prev = _manifest_rows(spark, path, None)
+        return prev + 1, (prev, manifest)
+
+    def write(version, planned):
+        # the rewrite is planned under the claim: an analysis error in
+        # it (updates whose columns do not match the table) backs out
+        # like a failed write
+        prev, manifest = planned
         touched = [r["file"] for r in manifest if _overlaps(r, lo, hi)]
-        carried = [r for r in manifest if not _overlaps(r, lo, hi)]
-        version = prev + 1
-        data_dir = f"{path}/v={version}"
-        if not _claim_version(spark, path, version):
-            if _attempt == max_retries or not _await_claim_release(
-                spark, path, version
-            ):
-                raise CommitConflict(
-                    f"merge into {path} lost the claim for v={version} "
-                    "and the claim never resolved; if no writer is "
-                    "active, run sweep_orphan_versions"
+        merged = updates
+        if touched:
+            # the touched rows come through the live-row reader: a
+            # rewrite must not resurrect rows deleted by tombstones or
+            # DV runs (the DV rows of these files go inert once the
+            # merge drops them from the manifest)
+            merged = (
+                _read_live(spark, path, prev, touched)
+                .join(
+                    updates.select(sort_col).distinct(),
+                    sort_col,
+                    "left_anti",
                 )
-            continue  # the winner committed — RE-PLAN from the new manifest
-        # the plan is built inside the try: an analysis error in it
-        # (updates whose columns do not match the table) must release
-        # the claim like a failed write
-        try:
-            merged = updates
-            if touched:
-                # the touched rows come through the live-row reader: a
-                # rewrite must not resurrect rows deleted by tombstones
-                # or DV runs (the DV rows of these files go inert once
-                # the merge drops them from the manifest)
-                merged = (
-                    _read_live(spark, path, prev, touched)
-                    .join(
-                        updates.select(sort_col).distinct(),
-                        sort_col,
-                        "left_anti",
-                    )
-                    .unionByName(updates)
-                )
-            (
-                merged.repartitionByRange(num_files, sort_col)
-                .sortWithinPartitions(sort_col)
-                .write.mode("errorifexists")
-                .parquet(data_dir)
+                .unionByName(updates)
             )
-            break
-        except Exception as e:
-            if not _is_path_exists_error(e):
-                _abort_claim(spark, path, version)
-                raise
-            _release_claim(spark, path, version)
-            raise CommitConflict(
-                f"merge into {path} claimed v={version} but its data "
-                "directory already exists (unclaimed orphan); run "
-                "sweep_orphan_versions"
-            ) from e
-    try:
-        _commit_manifest(
-            spark, path, version, data_dir, sort_col, carried=carried
-        )
-    except Exception:
-        _abort_claim(spark, path, version)
-        raise
-    return version
+        _write_data(merged, path, version, sort_col, num_files)
+        carried = [r for r in manifest if not _overlaps(r, lo, hi)]
+        _commit_manifest(spark, path, version, sort_col, carried=carried)
+
+    return _commit(spark, path, "merge", plan, write, retries=max_retries)
 
 
 def build_manifest_list(
@@ -1261,11 +1241,20 @@ def _append_schema_event(
     import pyarrow as pa
 
     prev = _head_version(spark, path)
-    version = prev + 1
-    if not _claim_version(spark, path, version):
-        raise CommitConflict(
-            f"schema event at {path} lost the claim for v={version}"
-        )
+    # ORDER MATTERS: manifest before event row. Claims are released on
+    # failure, so a later writer can legitimately re-mint this version
+    # id — an event row stranded by a manifest-write failure would then
+    # ACTIVATE under that unrelated commit (silent wrong schema). The
+    # inverse failure (manifest lands, event write fails) merely leaves
+    # a no-op metadata version and raises; the caller retries and the
+    # event lands at version+1.
+    version = _commit(
+        spark,
+        path,
+        "schema event",
+        lambda: (prev + 1, None),
+        lambda v, _: _copy_manifest(spark, path, prev, path, v),
+    )
     row = {"kind": kind, **fields}
     event = pa.table(
         {"v": pa.array([version], pa.int64())}
@@ -1274,18 +1263,6 @@ def _append_schema_event(
             for c in ("kind", "name", "old_name", "dtype", "default_sql")
         }
     )
-    # ORDER MATTERS: manifest before event row. Claims are released on
-    # failure now, so a later writer can legitimately re-mint this
-    # version id — an event row stranded by a manifest-write failure
-    # would then ACTIVATE under that unrelated commit (silent wrong
-    # schema). The inverse failure (manifest lands, event write fails)
-    # merely leaves a no-op metadata version and raises; the caller
-    # retries and the event lands at version+1.
-    try:
-        _copy_manifest(spark, path, prev, path, version)
-    except Exception:
-        _abort_claim(spark, path, version)
-        raise
     fs, root = _meta(spark, path)
     sidecars.write(fs, f"{root}/_schema_events", event, append=True)
     return version
@@ -1540,22 +1517,14 @@ def delete_from_snapshot(
     v=N would BOTH append into ``_deletes/v=N`` (the sidecar write is
     mode=append by design — one delete batch per version id), and the
     manifest LOSER's tombstones would activate under the winner's
-    commit, deleting keys no committed operation asked for. The
-    failure path purges the sidecar partition before releasing the
-    claim (see ``_purge_sidecar_partition``); a lost claim raises
-    ``CommitConflict`` — re-issue the delete against the advanced
-    table (deletes are predicate/key-scoped, so the retry is a fresh
-    call, not a replay).
+    commit, deleting keys no committed operation asked for. A failed
+    commit purges the sidecar partition before releasing the claim
+    (``_commit``); a lost claim raises ``CommitConflict`` — re-issue
+    the delete against the advanced table (deletes are
+    predicate/key-scoped, so the retry is a fresh call, not a replay).
     """
-    prev = _head_version(spark, path)
-    version = prev + 1
-    if not _claim_version(spark, path, version):
-        raise CommitConflict(
-            f"delete from {path} lost the claim for v={version}; "
-            "another writer is committing — retry against the "
-            "advanced table"
-        )
-    try:
+
+    def write(version, prev):
         # repartition(1), not coalesce(1): coalesce would collapse the
         # final distinct stage into one task (every tombstone key
         # through it); the exchange moves only finished key rows
@@ -1571,20 +1540,12 @@ def delete_from_snapshot(
             spark, path, "_deletes", version, wrote=wrote
         )
         _copy_manifest(spark, path, prev, path, version)
-    except Exception as e:
-        _purge_sidecar_partition(spark, path, "_deletes", version)
-        if _is_path_exists_error(e):
-            # claimed, yet the manifest path exists: wreckage of a
-            # crashed pre-claim writer — not ours to delete
-            _release_claim(spark, path, version)
-            raise CommitConflict(
-                f"delete from {path} claimed v={version} but its "
-                "manifest path already exists (unclaimed orphan); "
-                "run sweep_orphan_versions"
-            ) from e
-        _abort_claim(spark, path, version)
-        raise
-    return version
+
+    def plan():
+        prev = _head_version(spark, path)
+        return prev + 1, prev
+
+    return _commit(spark, path, "delete", plan, write)
 
 
 # ---------------------------------------------------------------------------
@@ -1784,22 +1745,19 @@ def restore_snapshot(
         raise ValueError(f"no snapshot v={source_version} to restore to")
     if source_version >= latest:
         raise ValueError("restore target must be an earlier version")
-    version = latest + 1
-    if not _claim_version(spark, path, version):
-        raise CommitConflict(
-            f"restore at {path} lost the claim for v={version}"
-        )
     # manifest BEFORE the _restores record (same reasoning as
     # _append_schema_event): with claims released on failure, a
     # stranded restore row would silently shadow tombstones under
     # whatever commit later re-mints this version id. A manifest
     # without its restore row is merely a plain metadata append — the
     # raise tells the caller the restore failed; retry lands it fully.
-    try:
-        _copy_manifest(spark, path, source_version, path, version)
-    except Exception:
-        _abort_claim(spark, path, version)
-        raise
+    version = _commit(
+        spark,
+        path,
+        "restore",
+        lambda: (latest + 1, None),
+        lambda v, _: _copy_manifest(spark, path, source_version, path, v),
+    )
     fs, root = _meta(spark, path)
     restore = pa.table(
         {
@@ -1839,53 +1797,41 @@ def shallow_clone(spark: SparkSession, src: str, dst: str) -> int:
         raise ValueError(
             f"shallow_clone target {dst} already holds a table"
         )
-    v = _head_version(spark, src)
-    if not _claim_version(spark, dst, v):
-        raise CommitConflict(
-            f"shallow_clone to {dst} lost the claim for v={v}; another "
-            "writer is bootstrapping the same target"
-        )
-    try:
-        _copy_manifest(spark, src, v, dst, v)
-        sfs, jvm = _fs(spark, src)
-        dfs, _ = _fs(spark, dst)
-        conf = spark._jsc.hadoopConfiguration()
-        for sidecar in (
-            "_deletes",
-            "_posdeletes",
-            "_restores",
-            "_schema_events",
-        ):
-            sp = jvm.org.apache.hadoop.fs.Path(f"{src}/{sidecar}")
-            if sfs.exists(sp):
-                jvm.org.apache.hadoop.fs.FileUtil.copy(
-                    sfs,
-                    sp,
-                    dfs,
-                    jvm.org.apache.hadoop.fs.Path(f"{dst}/{sidecar}"),
-                    False,
-                    conf,
-                )
-    except Exception:
-        # dst had no table before us: back out everything we created so
-        # a retry starts clean (a half-born clone is unreadable litter)
+    sidecars_ = ("_deletes", "_posdeletes", "_restores", "_schema_events")
+
+    def write(v, _):
         try:
-            fs, jvm = _fs(spark, dst)
-            for sub in (
-                "_manifest",
-                "_deletes",
-                "_posdeletes",
-                "_restores",
-                "_schema_events",
-            ):
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(f"{dst}/{sub}"), True
-                )
+            _copy_manifest(spark, src, v, dst, v)
+            sfs, jvm = _fs(spark, src)
+            dfs, _ = _fs(spark, dst)
+            conf = spark._jsc.hadoopConfiguration()
+            for sidecar in sidecars_:
+                sp = jvm.org.apache.hadoop.fs.Path(f"{src}/{sidecar}")
+                if sfs.exists(sp):
+                    jvm.org.apache.hadoop.fs.FileUtil.copy(
+                        sfs,
+                        sp,
+                        dfs,
+                        jvm.org.apache.hadoop.fs.Path(f"{dst}/{sidecar}"),
+                        False,
+                        conf,
+                    )
         except Exception:
-            pass
-        _abort_claim(spark, dst, v)
-        raise
-    return v
+            # dst had no table before us: back out every whole sidecar
+            # we created so a retry starts clean (a half-born clone is
+            # unreadable litter)
+            _remove(
+                spark, dst, [f"{dst}/{d}" for d in ("_manifest", *sidecars_)]
+            )
+            raise
+
+    return _commit(
+        spark,
+        dst,
+        "shallow_clone",
+        lambda: (_head_version(spark, src), None),
+        write,
+    )
 
 
 def _norm_uri(u: str) -> str:
@@ -2084,54 +2030,13 @@ def stage_snapshot(
     the staged version number."""
     spark = df.sparkSession
     prev = _latest_version(spark, path)
-    version = (prev or 0) + 1
-    if not _claim_version(spark, path, version):
-        raise CommitConflict(
-            f"stage at {path} lost the claim for v={version}; another "
-            "writer or stage holds it"
-        )
-    data_dir = f"{path}/v={version}"
-    try:
-        (
-            df.repartitionByRange(num_files, sort_col)
-            .sortWithinPartitions(sort_col)
-            .write.mode("errorifexists")
-            .parquet(data_dir)
-        )
-        carried = (
-            _manifest_rows(spark, path, prev)[0] if prev is not None else ()
-        )
-        _write_manifest(
-            spark,
-            path,
-            version,
-            carried,
-            _zone_map(spark, data_dir, sort_col),
-            manifest_dir="_staged_manifest",
-        )
-    except Exception as e:
-        if _is_path_exists_error(e):
-            _release_claim(spark, path, version)
-            raise CommitConflict(
-                f"stage at {path} claimed v={version} but its target "
-                "already exists (unclaimed orphan); run "
-                "sweep_orphan_versions"
-            ) from e
-        # failed stage: drop the partial staged manifest too, then the
-        # data dir + claim (abort_staged's cleanup, minus the raise)
-        try:
-            fs, jvm = _fs(spark, path)
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{path}/_staged_manifest/v={version}"
-                ),
-                True,
-            )
-        except Exception:
-            pass
-        _abort_claim(spark, path, version)
-        raise
-    return version
+    return _commit(
+        spark,
+        path,
+        "stage",
+        lambda: ((prev or 0) + 1, prev),
+        _append_write(df, path, sort_col, num_files, "_staged_manifest"),
+    )
 
 
 def read_staged(
@@ -2370,14 +2275,19 @@ def abort_branch(spark: SparkSession, path: str, branch: str) -> None:
 
 
 def sweep_orphan_versions(spark: SparkSession, path: str) -> list[int]:
-    """Delete ``v=N`` data directories ABOVE the latest committed
-    version that have neither a manifest nor a staged (write-audit-
-    publish) manifest — the wreckage of a writer that crashed between
-    claiming its version (the data write/rename) and committing. Such
-    an orphan permanently wedges the table: every subsequent commit
-    targets the same N and loses the ``errorifexists`` claim.
+    """Back out every version ABOVE the latest committed one that has
+    no staged (write-audit-publish) manifest: the wreckage of a writer
+    that crashed between claiming its version and committing. Each
+    loses what a failed live commit's back-out deletes
+    (``_version_paths``: its data directory, a half-written manifest,
+    its delete sidecars; a spec table's data directory and
+    ``_specmanifest``) and its claim. Such an orphan wedges the table:
+    every later commit targets the same N and finds its claim held or
+    its target present. A stranded delete sidecar is worse than a
+    wedge — its tombstones or DV runs would ACTIVATE the moment a
+    later writer commits the same version number.
 
-    ONLY claims above latest are swept. Directories at or below the
+    ONLY versions above latest are swept. Directories at or below the
     latest version are never orphans in the wedging sense (commits
     target latest+1), and they may hold files a RETAINED manifest still
     references even when their own manifest expired — metadata-only
@@ -2390,68 +2300,53 @@ def sweep_orphan_versions(spark: SparkSession, path: str) -> list[int]:
     it only when no writer is in flight (an active writer's claimed-
     but-not-yet-committed version looks identical to an orphan).
     Returns the swept version numbers."""
-    fs, jvm = _fs(spark, path)
-
-    def _p(s: str):
-        return jvm.org.apache.hadoop.fs.Path(s)
-
-    latest = 0
-    if _sidecar_exists(spark, path, "_manifest"):
-        vs = versions(spark, path)
-        latest = vs[-1] if vs else 0
-    # A write-audit-publish stage (stage_snapshot) parks its data under
-    # an unmanifested v= dir ON PURPOSE — its claim lives in
-    # _staged_manifest. Staged versions are pending work, not wreckage.
-    staged: set[int] = set()
-    for st in fs.globStatus(_p(f"{path}/_staged_manifest/v=*")) or []:
-        try:
-            staged.add(int(st.getPath().getName().split("=", 1)[1]))
-        except ValueError:
-            continue
-    swept: set[int] = set()
-    for status in fs.globStatus(_p(f"{path}/v=*")) or []:
-        name = status.getPath().getName()
-        try:
-            v = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if v > latest and v not in staged:
-            fs.delete(status.getPath(), True)
-            swept.add(v)
-    # crashed writers' claim markers above latest wedge the next commit
-    # exactly like their data dirs — clear those too (staged spared).
-    # Enumerated through the claim backend so a catalog-backed
-    # deployment sweeps its catalog, not a marker directory.
     from .claims import get_claim_backend
 
-    backend = get_claim_backend()
-    for key in backend.held(spark, path):
-        if not key.startswith("v="):
-            continue  # refseq claims never wedge commits (see _append_ref)
-        try:
-            v = int(key.split("=", 1)[1])
-        except ValueError:
-            continue
-        if v > latest and v not in staged:
-            backend.release(spark, path, key)
-            swept.add(v)
-    # Stranded delete sidecars above latest are the crashed-writer twin
-    # of the live failure path's purge (_purge_sidecar_partition):
-    # tombstone/DV partitions written under a claim that never produced
-    # a manifest would ACTIVATE the moment a later writer commits the
-    # same version number — silent row loss, not litter. Same > latest
-    # scoping as the data dirs: at or below latest every sidecar
-    # partition belongs to a committed version.
-    for sidecar in ("_deletes", "_posdeletes"):
-        for st in fs.globStatus(_p(f"{path}/{sidecar}/v=*")) or []:
+    fs, jvm = _fs(spark, path)
+
+    def _named(pattern: str) -> set[int]:
+        out = set()
+        for st in fs.globStatus(jvm.org.apache.hadoop.fs.Path(pattern)) or []:
             try:
-                v = int(st.getPath().getName().split("=", 1)[1])
+                out.add(int(st.getPath().getName().split("=", 1)[1]))
             except ValueError:
                 continue
-            if v > latest and v not in staged:
-                fs.delete(st.getPath(), True)
-                swept.add(v)
-    return sorted(swept)
+        return out
+
+    # a spec table (operators.partspec) has no _manifest: its versions
+    # own v=N and _specmanifest/v=N
+    manifest_dir = "_manifest"
+    if not _sidecar_exists(spark, path, manifest_dir) and _sidecar_exists(
+        spark, path, "_specmanifest"
+    ):
+        manifest_dir = "_specmanifest"
+    # an existing manifest with no committed version (a half-written
+    # first one) is latest 0; a failed listing must raise, never read
+    # as "nothing committed" and sweep every version
+    vs = _committed(spark, path, manifest_dir)
+    latest = vs[-1] if vs else 0
+    # a stage parks its data under an unmanifested v= dir ON PURPOSE:
+    # staged versions are pending work, not wreckage
+    staged = _named(f"{path}/_staged_manifest/v=*")
+    appended, targets = _version_paths(path, "*", manifest_dir)
+    found = set().union(*(_named(p) for p in appended + targets))
+    # claims through the backend, so a catalog-backed deployment sweeps
+    # its catalog; refseq claims never wedge commits (see _append_ref)
+    backend = get_claim_backend()
+    claimed = {
+        int(k[2:])
+        for k in backend.held(spark, path)
+        if k.startswith("v=") and k[2:].isdigit()
+    }
+    swept = sorted(
+        v for v in found | claimed if v > latest and v not in staged
+    )
+    for v in swept:
+        appended, targets = _version_paths(path, v, manifest_dir)
+        _remove(spark, path, appended + targets)
+        if v in claimed:
+            backend.release(spark, path, f"v={v}")
+    return swept
 
 
 def snapshot_row_count(

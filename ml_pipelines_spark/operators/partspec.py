@@ -56,14 +56,7 @@ from pyspark.sql import functions as F
 
 from . import sidecars
 from .filestats import _num
-from .manifest import (
-    CommitConflict,
-    _abort_claim,
-    _claim_version,
-    _latest_version,
-    _meta,
-    ledgered_batch_sink,
-)
+from .manifest import _commit, _latest_version, _meta, ledgered_batch_sink
 
 _MANIFEST = "_specmanifest"
 
@@ -196,15 +189,6 @@ def write_spec_snapshot(
     missing = [f.source for f in fields if f.source not in df.columns]
     if missing:
         raise KeyError(f"spec columns not in frame: {missing}")
-    # same atomic commit point as the manifest table layer; existence-
-    # probed bootstrap (a _specmanifest that EXISTS but fails to read
-    # is corruption and must raise, not fork a parallel v=1 history)
-    version = (_latest_version(spark, path, _MANIFEST) or 0) + 1
-    if not _claim_version(spark, path, version):
-        raise CommitConflict(
-            f"spec write to {path} lost the claim for v={version}"
-        )
-    data_dir = f"{path}/v={version}"
     shadows = [f.shadow for f in fields]
     # _v_* twins carry the EXACT string value inside the files:
     # directory-read partition inference re-types dir names ("007" ->
@@ -212,16 +196,18 @@ def write_spec_snapshot(
     # equality for numeric-looking or boolean values; the in-file twin
     # is inference-proof
     values = [f.infile for f in fields]
-    out = df
-    for fld in fields:
-        expr = fld.value_expr()
-        out = out.withColumn(fld.shadow, expr).withColumn(
-            fld.infile, expr
-        )
     # null sources, not _v_* values: bucket() hashes a null to a bucket
     has_null = " OR ".join(f"`{f.source}` IS NULL" for f in fields)
     stat = F.col(stats_col) if stats_col else F.lit(None)
-    try:
+
+    def write(version, _):
+        data_dir = f"{path}/v={version}"
+        out = df
+        for fld in fields:
+            expr = fld.value_expr()
+            out = out.withColumn(fld.shadow, expr).withColumn(
+                fld.infile, expr
+            )
         (
             out.repartition(*[F.col(pc) for pc in shadows])
             .write.mode("errorifexists")
@@ -262,13 +248,18 @@ def write_spec_snapshot(
         if version > 1:
             new = _manifest_rows(spark, path, version - 1)[0] + new
         _write_manifest(spark, path, version, new)
-    except Exception:
-        # failed post-claim commit: drop the partial data dir, release
-        # the claim (manifest._abort_claim) so the spec table is not
-        # wedged, and surface the real error (ADVICE r9)
-        _abort_claim(spark, path, version)
-        raise
-    return version
+
+    # existence-probed bootstrap: a _specmanifest that EXISTS but fails
+    # to read is corruption and must raise, not fork a parallel v=1
+    # history
+    return _commit(
+        spark,
+        path,
+        "spec write",
+        lambda: ((_latest_version(spark, path, _MANIFEST) or 0) + 1, None),
+        write,
+        manifest_dir=_MANIFEST,
+    )
 
 
 def _manifest_rows(spark: SparkSession, path: str, version: int | None):
@@ -418,20 +409,15 @@ def compact_spec_snapshot(spark: SparkSession, path: str) -> int:
     different keys) and the new manifest preserves every tuple
     verbatim. Readers of older versions are untouched (new version,
     new files). Returns the new version."""
-    manifest, prev = _manifest_rows(spark, path, None)
-    version = prev + 1
-    if not _claim_version(spark, path, version):
-        raise CommitConflict(
-            f"spec compaction at {path} lost the claim for v={version}"
-        )
-    data_dir = f"{path}/v={version}"
-    # group files by identical tuple; one output file per group
-    groups: dict[tuple, list] = {}
-    for r in manifest:
-        key = tuple(sorted(r["part"].items()))
-        groups.setdefault(key, []).append(r["file"])
-    keys = sorted(groups)
-    try:
+
+    def write(version, manifest):
+        data_dir = f"{path}/v={version}"
+        # group files by identical tuple; one output file per group
+        groups: dict[tuple, list] = {}
+        for r in manifest:
+            key = tuple(sorted(r["part"].items()))
+            groups.setdefault(key, []).append(r["file"])
+        keys = sorted(groups)
         # one read and one write for all tuples, so the job count does
         # not grow with them: each row's group id is looked up by its
         # file in a literal map (O(files), like the manifest; a join
@@ -484,10 +470,14 @@ def compact_spec_snapshot(spark: SparkSession, path: str) -> int:
                 for r in per_file
             ],
         )
-    except Exception:
-        _abort_claim(spark, path, version)
-        raise
-    return version
+
+    def plan():
+        manifest, prev = _manifest_rows(spark, path, None)
+        return prev + 1, manifest
+
+    return _commit(
+        spark, path, "spec compaction", plan, write, manifest_dir=_MANIFEST
+    )
 
 
 def stream_spec_append_sink(

@@ -77,66 +77,38 @@ def delete_where(
     snapshot state the caller sees (existing tombstones and DVs
     applied first, so re-deleting already-dead rows records nothing).
     """
-    from .manifest import (
-        CommitConflict,
-        _abort_claim,
-        _claim_version,
-        _copy_manifest,
-        _head_version,
-        _is_path_exists_error,
-        _purge_sidecar_partition,
-        _release_claim,
-        _sidecar_partition_exists,
-        _verify_sidecar_before_commit,
-    )
+    from . import manifest as M
 
-    prev = _head_version(spark, path)
-    version = prev + 1
-    if not _claim_version(spark, path, version):
-        raise CommitConflict(
-            f"positional delete at {path} lost the claim for v={version}"
-        )
-    try:
-        from .manifest import read_snapshot
+    if isinstance(condition, str):
+        condition = F.expr(condition)
 
-        cur = read_snapshot(spark, path, prev, with_positions=True)
-        if isinstance(condition, str):
-            condition = F.expr(condition)
+    def write(version, prev):
+        cur = M.read_snapshot(spark, path, prev, with_positions=True)
         hit = cur.filter(condition).select(
             F.col(_PD_FILE).alias("file"), F.col(_PD_POS).alias("pos")
         )
-        runs = _runs_from_hits(hit, version)
         # repartition(1), not coalesce(1): coalesce collapses the
         # window+agg stage into ONE task (a scattered delete funnels
         # every matched row through it); the extra exchange moves only
         # the finished run rows to the single writer
+        runs = _runs_from_hits(hit, version)
         runs.repartition(1).write.mode("append").partitionBy("v").parquet(
             f"{path}/{_SIDECAR}"
         )
         # an EMPTY run set (zero-match predicate) writes no partition
         # dir — capture that so the pre-commit verify skips its
         # existence check (the claim check still runs)
-        wrote = _sidecar_partition_exists(spark, path, _SIDECAR, version)
-        _verify_sidecar_before_commit(
+        wrote = M._sidecar_partition_exists(spark, path, _SIDECAR, version)
+        M._verify_sidecar_before_commit(
             spark, path, _SIDECAR, version, wrote=wrote
         )
-        _copy_manifest(spark, path, prev, path, version)
-    except Exception as e:
-        # a stranded _posdeletes/v=N partition would ACTIVATE under the
-        # next committed v=N — purge it before the claim goes away
-        _purge_sidecar_partition(spark, path, _SIDECAR, version)
-        if _is_path_exists_error(e):
-            # claimed, yet the manifest path exists: wreckage of a
-            # crashed pre-claim writer — not ours to delete
-            _release_claim(spark, path, version)
-            raise CommitConflict(
-                f"positional delete at {path} claimed v={version} but "
-                "its manifest path already exists (unclaimed orphan); "
-                "run sweep_orphan_versions"
-            ) from e
-        _abort_claim(spark, path, version)
-        raise
-    return version
+        M._copy_manifest(spark, path, prev, path, version)
+
+    def plan():
+        prev = M._head_version(spark, path)
+        return prev + 1, prev
+
+    return M._commit(spark, path, "positional delete", plan, write)
 
 
 def _runs_from_hits(hit: DataFrame, version: int) -> DataFrame:
@@ -195,20 +167,7 @@ def merge_on_read(
     every snapshot read goes through the one live-row reader, which
     applies DV runs.
     """
-    from .manifest import (
-        CommitConflict,
-        _abort_claim,
-        _band,
-        _claim_version,
-        _is_path_exists_error,
-        _manifest_rows,
-        _overlaps,
-        _purge_sidecar_partition,
-        _read_live,
-        _release_claim,
-        _sidecar_partition_exists,
-        _verify_sidecar_before_commit,
-    )
+    from . import manifest as M
 
     band = updates.agg(
         F.min(key).alias("lo"), F.max(key).alias("hi")
@@ -220,25 +179,18 @@ def merge_on_read(
         raise EmptyBatchError(
             f"merge_on_read into {path}: empty updates batch"
         )
-    manifest, prev = _manifest_rows(spark, path, None)
-    version = prev + 1
-    if not _claim_version(spark, path, version):
-        raise CommitConflict(
-            f"merge_on_read into {path} lost the claim for v={version}; "
-            "another writer is committing — retry against the advanced "
-            "table"
-        )
-    data_dir = f"{path}/v={version}"
-    try:
-        lo, hi = band["lo"], band["hi"]
-        keep = [r["file"] for r in manifest if _overlaps(r, lo, hi)]
+    lo, hi = band["lo"], band["hi"]
+
+    def write(version, planned):
+        prev, manifest = planned
+        keep = [r["file"] for r in manifest if M._overlaps(r, lo, hi)]
         if keep:
-            cur = _read_live(
+            cur = M._read_live(
                 spark,
                 path,
                 prev,
                 keep,
-                lambda df: _band(df, key, lo, hi),
+                lambda df: M._band(df, key, lo, hi),
                 with_positions=True,
             )
             hit = cur.join(
@@ -250,11 +202,8 @@ def merge_on_read(
             )
         else:
             hit = spark.createDataFrame([], "file string, pos bigint")
+        # repartition(1), not coalesce(1): see delete_where
         runs = _runs_from_hits(hit, version)
-        # repartition(1), not coalesce(1): coalesce collapses the
-        # window+agg stage into ONE task (a scattered delete funnels
-        # every matched row through it); the extra exchange moves only
-        # the finished run rows to the single writer
         runs.repartition(1).write.mode("append").partitionBy("v").parquet(
             f"{path}/{_SIDECAR}"
         )
@@ -263,35 +212,18 @@ def merge_on_read(
         # the runs write — probing after the (long) data write would
         # misread a DV partition that vanished mid-commit as "never
         # written" and silently drop the deletes (self-review r11).
-        wrote = _sidecar_partition_exists(spark, path, _SIDECAR, version)
-        (
-            updates.repartitionByRange(num_files, key)
-            .sortWithinPartitions(key)
-            .write.mode("errorifexists")
-            .parquet(data_dir)
-        )
-        from .manifest import _commit_manifest
-
-        _verify_sidecar_before_commit(
+        wrote = M._sidecar_partition_exists(spark, path, _SIDECAR, version)
+        M._write_data(updates, path, version, key, num_files)
+        M._verify_sidecar_before_commit(
             spark, path, _SIDECAR, version, wrote=wrote
         )
-        _commit_manifest(
-            spark, path, version, data_dir, key, carried=manifest
-        )
-    except Exception as e:
-        # a stranded _posdeletes/v=N partition would ACTIVATE under the
-        # next committed v=N — purge it before the claim goes away
-        _purge_sidecar_partition(spark, path, _SIDECAR, version)
-        if _is_path_exists_error(e):
-            _release_claim(spark, path, version)
-            raise CommitConflict(
-                f"merge_on_read into {path} claimed v={version} but its "
-                "target already exists (unclaimed orphan); run "
-                "sweep_orphan_versions"
-            ) from e
-        _abort_claim(spark, path, version)
-        raise
-    return version
+        M._commit_manifest(spark, path, version, key, carried=manifest)
+
+    def plan():
+        manifest, prev = M._manifest_rows(spark, path, None)
+        return prev + 1, (prev, manifest)
+
+    return M._commit(spark, path, "merge_on_read", plan, write)
 
 
 def stream_upsert_sink(

@@ -23,6 +23,27 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def fail_next_parquet_write(monkeypatch):
+    """Setting ``["on"]`` makes the next driver-side parquet write
+    (``pyarrow.parquet.write_table``, inside ``sidecars.write``) raise
+    ``OSError`` once — the first such write of a table commit is its
+    manifest's."""
+    import pyarrow.parquet as pq
+
+    real = pq.write_table
+    armed = {"on": False}
+
+    def flaky(*a, **kw):
+        if armed["on"]:
+            armed["on"] = False
+            raise OSError("injected manifest write failure")
+        return real(*a, **kw)
+
+    monkeypatch.setattr(pq, "write_table", flaky)
+    return armed
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE

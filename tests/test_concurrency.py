@@ -609,3 +609,143 @@ def test_delete_where_survives_sweep_race_loudly(spark, table, monkeypatch):
         delete_where(spark, table, "k >= 90")
     assert versions(spark, table) == [1]
     assert read_snapshot(spark, table).count() == 100
+
+
+# ---------------------------------------------------------------------------
+# One commit seam (manifest._commit): a failed commit backs out
+# everything its version owns, the half-written manifest directory
+# included, and sweep_orphan_versions clears the same list for a
+# crashed writer. The failure is injected where it happens in
+# production — inside sidecars.write, after it created the version's
+# manifest directory — not by replacing sidecars.write whole.
+# ---------------------------------------------------------------------------
+@pytest.mark.parametrize("commit", ["append", "delete", "restore"])
+def test_failed_manifest_write_does_not_wedge_the_table(
+    spark, table, fail_next_parquet_write, commit
+):
+    import os
+
+    from ml_pipelines_spark.operators.claims import get_claim_backend
+
+    append_snapshot(_rows(spark, 100, 150), table, "k")  # v=2
+    run = {
+        "append": lambda: append_snapshot(_rows(spark, 200, 210), table, "k"),
+        "delete": lambda: M.delete_from_snapshot(
+            spark, table, "k", _rows(spark, 0, 10)
+        ),
+        "restore": lambda: M.restore_snapshot(spark, table, 1),
+    }[commit]
+    fail_next_parquet_write["on"] = True
+    with pytest.raises(OSError, match="injected"):
+        run()
+    assert not os.path.exists(f"{table}/_manifest/v=3")
+    assert not get_claim_backend().holds(spark, table, "v=3")
+    assert versions(spark, table) == [1, 2]
+    # neither the next append nor the next delete is wedged
+    assert append_snapshot(_rows(spark, 300, 310), table, "k") == 3
+    keys = _rows(spark, 0, 10)
+    assert M.delete_from_snapshot(spark, table, "k", keys) == 4
+    assert read_snapshot(spark, table).count() == 150
+
+
+def test_sweep_clears_a_half_written_manifest(spark, table):
+    # a driver that crashed inside sidecars.write left _manifest/v=2/
+    # holding only a hidden temp file: no committed version, but a
+    # target every later commit of v=2 collides with
+    import os
+
+    os.makedirs(f"{table}/_manifest/v=2")
+    open(f"{table}/_manifest/v=2/.part-00000-x.parquet.tmp", "wb").close()
+    assert versions(spark, table) == [1]
+    assert sweep_orphan_versions(spark, table) == [2]
+    assert not os.path.exists(f"{table}/_manifest/v=2")
+    assert append_snapshot(_rows(spark, 100, 150), table, "k") == 2
+    assert read_snapshot(spark, table).count() == 150
+
+
+@pytest.mark.parametrize(
+    "error", [PermissionError, M.sidecars.UnsupportedFilesystemError]
+)
+def test_sweep_raises_when_the_manifest_listing_fails(
+    spark, table, monkeypatch, error
+):
+    # a listing that fails (a transient store error, a scheme pyarrow
+    # cannot open) is not "no committed version": read as latest 0, it
+    # would sweep every committed version of the table
+    import os
+
+    assert append_snapshot(_rows(spark, 100, 150), table, "k") == 2
+    assert M.delete_from_snapshot(spark, table, "k", _rows(spark, 0, 10)) == 3
+    owned = [
+        f"{table}/{d}"
+        for d in ("v=1", "v=2", "_manifest/v=1", "_manifest/v=2",
+                  "_manifest/v=3", "_deletes/v=3")
+    ]
+    assert all(os.path.exists(p) for p in owned)
+
+    def fail(*a, **k):
+        raise error("listing failed")
+
+    monkeypatch.setattr(M.sidecars, "committed_versions", fail)
+    with pytest.raises(error, match="listing failed"):
+        sweep_orphan_versions(spark, table)
+    monkeypatch.undo()
+    assert all(os.path.exists(p) for p in owned)
+    assert versions(spark, table) == [1, 2, 3]
+    assert read_snapshot(spark, table).count() == 140
+
+
+def test_failed_first_commit_leaves_no_manifest_dir(
+    spark, fail_next_parquet_write
+):
+    # an empty _manifest reads as a corrupt table (see
+    # test_corrupt_manifest_raises_instead_of_forking_history): a back-
+    # out of v=1 must not leave one behind
+    import os
+
+    out = tempfile.mkdtemp(prefix="first_commit_")
+    try:
+        fail_next_parquet_write["on"] = True
+        with pytest.raises(OSError, match="injected"):
+            write_manifest_table(_rows(spark, 0, 10), out, "k")
+        assert not os.path.exists(f"{out}/_manifest")
+        assert write_manifest_table(_rows(spark, 0, 10), out, "k") == 1
+        assert read_snapshot(spark, out).count() == 10
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+@pytest.mark.parametrize(
+    "case", ["bogus_curve", "empty_frame", "missing_column"]
+)
+def test_zordered_failures_release_their_claim(
+    spark, table, monkeypatch, case
+):
+    from pyspark.errors import AnalysisException
+
+    from ml_pipelines_spark.operators.claims import get_claim_backend
+    from ml_pipelines_spark.operators.filestats import (
+        write_manifest_table_zordered as zordered,
+    )
+
+    monkeypatch.setattr(M, "_CLAIM_WAIT_S", 0.5)
+    rows = _rows(spark, 100, 150)
+    call, err = {
+        "bogus_curve": (
+            lambda: zordered(rows, table, "k", "val", curve="bogus"),
+            ValueError,
+        ),
+        "empty_frame": (
+            lambda: zordered(rows.filter(F.lit(False)), table, "k", "val"),
+            TypeError,
+        ),
+        "missing_column": (
+            lambda: zordered(rows, table, "k", "nope"),
+            AnalysisException,
+        ),
+    }[case]
+    with pytest.raises(err):
+        call()
+    assert "v=2" not in get_claim_backend().held(spark, table)
+    assert append_snapshot(_rows(spark, 100, 150), table, "k") == 2
+    assert read_snapshot(spark, table).count() == 150

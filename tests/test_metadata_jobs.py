@@ -254,3 +254,50 @@ def test_expire_filestats_gc_runs_no_job(spark, tmp_path):
     # every stats row named a compacted-away file: none survive
     assert spark.read.parquet(f"{indexed}/_filestats").count() == 0
     assert M.snapshot_row_count(spark, indexed) == 200
+
+
+def test_commit_jobs_pin_their_counts(spark, tmp_path):
+    # every commit runs its data work and nothing more; the counts were
+    # measured before the commits shared one seam, which adds no job
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("val")
+        )
+
+    d = str(tmp_path / "table")
+    zd = str(tmp_path / "zordered")
+    counts = {
+        "write_manifest_table": _jobs(
+            spark, M.write_manifest_table, rows(0, 200), d, "k", num_files=4
+        ),
+        "append_snapshot": _jobs(
+            spark, M.append_snapshot, rows(200, 260), d, "k", num_files=2
+        ),
+        "stage_snapshot": _jobs(
+            spark, M.stage_snapshot, rows(260, 280), d, "k", num_files=1
+        ),
+    }
+    M.abort_staged(spark, d, 3)
+    counts["delete_where"] = _jobs(spark, P.delete_where, spark, d, "k >= 250")
+    counts["merge_on_read"] = _jobs(
+        spark, P.merge_on_read, spark, d, rows(40, 60), "k"
+    )
+    counts["write_manifest_table_zordered"] = _jobs(
+        spark,
+        FS.write_manifest_table_zordered,
+        rows(0, 200),
+        zd,
+        "k",
+        "val",
+        num_files=4,
+    )
+    assert counts == {
+        "write_manifest_table": 6,
+        "append_snapshot": 6,
+        "stage_snapshot": 5,
+        "delete_where": 4,
+        "merge_on_read": 14,
+        "write_manifest_table_zordered": 11,
+    }
+    assert M.versions(spark, d) == [1, 2, 3, 4]
+    assert M.read_snapshot(spark, d).count() == 250
